@@ -282,13 +282,9 @@ def main() -> None:
 
             def _run(fn=fn, clear=clear_capstone):
                 if clear:
-                    from chiv_spark.queries.mlprep import _CAPSTONE_CACHE
+                    from chiv_spark.core import state
 
-                    for flags, cans in _CAPSTONE_CACHE.values():
-                        flags.unpersist()
-                        for c in cans.values():
-                            c.unpersist()
-                    _CAPSTONE_CACHE.clear()
+                    state.clear("capstone")
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
             timings[name], spread[name] = _bench_one(_run)

@@ -543,7 +543,14 @@ class Archiver:
             return
         path = f"{bucket.rstrip('/')}/{key}"
         if fmt == "csv":
-            w = df.write.mode("overwrite").option("header", True)
+            # Spark's CSV writer trims string edges by default; chiv's
+            # encoder writes values verbatim
+            w = (
+                df.write.mode("overwrite")
+                .option("header", True)
+                .option("ignoreLeadingWhiteSpace", False)
+                .option("ignoreTrailingWhiteSpace", False)
+            )
             if opts.null is not None:
                 w = w.option("nullValue", opts.null).option("emptyValue", "")
             w.csv(path)

@@ -1,4 +1,4 @@
-"""Cheap, memoized relation-size estimates for the scale-adaptive
+"""Cheap relation-size estimates for the scale-adaptive
 form gates (quality verdict, media codec spread, archive encode
 spread).
 
@@ -18,7 +18,7 @@ size of the relation's leaf input files — the same number the
 optimizer's own leaf estimate starts from (HadoopFsRelation's
 sizeInBytes is the file total × ``fileCompressionFactor``, default
 1.0) — computed from one ``inputFiles()`` plan walk (no optimizer
-run) plus filesystem stats, memoized per (application, file set).
+run) plus one filesystem stat per file.
 Relations with no resolvable input files (in-memory test relations,
 streaming microbatches) fall back to the ANALYZED plan's stats
 visitor: still no optimizer run, and the analyzed plan is already
@@ -29,8 +29,7 @@ from __future__ import annotations
 
 import os
 
-#: (applicationId, sorted input-file tuple) -> summed on-disk bytes
-_SIZE_CACHE: dict = {}
+from chiv_spark.core.state import local_path
 
 
 def relation_size_est(df) -> int:
@@ -43,26 +42,12 @@ def relation_size_est(df) -> int:
         files = df.inputFiles()
     except Exception:  # noqa: BLE001 — estimate only steers a form gate
         files = None
-    if files:
-        key = (df.sparkSession.sparkContext.applicationId, tuple(sorted(files)))
-        hit = _SIZE_CACHE.get(key)
-        if hit is not None:
-            return hit
-        total = 0
+    paths = [local_path(f) for f in files or ()]
+    if paths and None not in paths:
         try:
-            for f in files:
-                p = f
-                if p.startswith("file:"):
-                    # file:///x/y and file:/x/y both resolve to /x/y
-                    p = p[5:]
-                    while p.startswith("//"):
-                        p = p[1:]
-                total += os.path.getsize(p)
+            return sum(os.path.getsize(p) for p in paths)
         except OSError:
-            total = -1
-        if total >= 0:
-            _SIZE_CACHE[key] = total
-            return total
+            pass
     # no leaf files (LocalRelation, microbatch, non-local FS): the
     # analyzed plan's stats visitor — a plan walk, not an optimizer run
     try:

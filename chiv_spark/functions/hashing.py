@@ -36,7 +36,3 @@ def hash64_seeded(col: Column | str, seed: int) -> Column:
 def duckdb_hash64(expr: str) -> str:
     """The DuckDB SQL text computing the same hash as :func:`hash64`."""
     return f"(('0x' || substring(md5({expr}), 1, 15))::BIGINT)"
-
-
-def duckdb_hash64_seeded(expr: str, seed: int) -> str:
-    return duckdb_hash64(f"({expr} || '#{seed}')")

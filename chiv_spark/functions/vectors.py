@@ -94,7 +94,3 @@ def l2_norm_fixed(a: Column | str, dim: int) -> Column:
         for i in range(1, dim + 1)
     ]
     return F.sqrt(functools.reduce(operator.add, terms))
-
-
-def cosine_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
-    return dot_fixed(a, b, dim) / (l2_norm_fixed(a, dim) * l2_norm_fixed(b, dim))

@@ -123,19 +123,6 @@ def decode_image(payload: bytes) -> tuple[int, int, int, bytes]:
     )
 
 
-def fake_feature(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic stand-in for an embedding model: bytes → md5 →
-    dim floats in [0,1). Lets the full pipeline run end-to-end."""
-    import hashlib
-
-    out: list[float] = []
-    h = payload
-    for i in range(dim):
-        h = hashlib.md5(h + bytes([i])).digest()
-        out.append(int.from_bytes(h[:8], "big") / 2**64)
-    return out
-
-
 def extract_features(media: DataFrame, batch_hint: int = 64) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 

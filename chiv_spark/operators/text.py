@@ -26,10 +26,6 @@ def _toks() -> Column:
     return F.split(F.col("text"), " ")
 
 
-def tokens_col() -> Column:
-    return _toks()
-
-
 def token_count() -> Column:
     """Whitespace token count."""
     return F.size(_toks()).cast("long")

@@ -15,23 +15,25 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-_SHIPPED: set[str] = set()
+from chiv_spark.core import state
 
 
 def ensure_shipped(spark: SparkSession) -> None:
-    app_id = spark.sparkContext.applicationId
-    if app_id in _SHIPPED:
-        return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(tempfile.gettempdir(), f"chiv_spark_pkg_{os.getpid()}.zip")
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fname in files:
-                    if not fname.endswith(".py"):
-                        continue
-                    full = os.path.join(root, fname)
-                    rel = os.path.join("chiv_spark", os.path.relpath(full, pkg_dir))
-                    zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
-    _SHIPPED.add(app_id)
+    """Add the zipped package to the application, once per application."""
+
+    def ship(_stale) -> str:
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        zip_path = os.path.join(tempfile.gettempdir(), f"chiv_spark_pkg_{os.getpid()}.zip")
+        if not os.path.exists(zip_path):
+            with zipfile.ZipFile(zip_path, "w") as zf:
+                for root, _dirs, files in os.walk(pkg_dir):
+                    for fname in files:
+                        if not fname.endswith(".py"):
+                            continue
+                        full = os.path.join(root, fname)
+                        rel = os.path.join("chiv_spark", os.path.relpath(full, pkg_dir))
+                        zf.write(full, rel)
+        spark.sparkContext.addPyFile(zip_path)
+        return zip_path
+
+    state.get_or_build(spark, "pyship", None, (), ship)

@@ -33,34 +33,3 @@ def query(name: str, oracle: str | None, doc: str = "") -> Callable[[QueryFn], Q
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_table(spark, sf_dir, name)
-
-
-def table_fingerprint(sf_dir: str, tables: tuple[str, ...] = ("documents", "embeddings")) -> tuple:
-    """Content fingerprint of the input tables a session-scoped cache
-    depends on: (path, size, mtime) per file under each table's
-    parquet path (r15 verdict task 3 — a cache keyed only by
-    (applicationId, sf_dir) serves STALE results if the corpus at
-    sf_dir is rewritten mid-session, exactly the ingest scenario).
-    Local-FS stat only — the test/bench layout; a cloud deployment
-    swaps this for the table format's snapshot id."""
-    import os
-
-    out: list[tuple] = []
-    for name in tables:
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.isdir(p):
-            for root, dirs, files in os.walk(p):
-                # os.walk honors in-place dir sorting: without it the
-                # tuple's ordering follows filesystem enumeration and
-                # identical content can fingerprint unequal across
-                # calls, spuriously re-seeding every dependent cache
-                # (r16 advice).
-                dirs.sort()
-                for fn in sorted(files):
-                    fp = os.path.join(root, fn)
-                    st = os.stat(fp)
-                    out.append((fp, st.st_size, st.st_mtime_ns))
-        elif os.path.exists(p):
-            st = os.stat(p)
-            out.append((p, st.st_size, st.st_mtime_ns))
-    return tuple(sorted(out))

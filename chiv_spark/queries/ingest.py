@@ -53,9 +53,10 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from chiv_spark.core import state
 from chiv_spark.functions.hashing import hash64
 from chiv_spark.operators import dedup
-from chiv_spark.queries.base import query, t, table_fingerprint
+from chiv_spark.queries.base import query, t
 from chiv_spark.streaming.dedup_index import (
     SEED_BATCH,
     anti_join_tombstones,
@@ -75,13 +76,6 @@ def _fate_col():
 def _smp_col():
     return hash64(F.concat(F.lit("smp:"), F.col("doc_id").cast("string"))) % 100
 
-
-#: (applicationId, sf_dir, input fingerprint) -> seeded state dir.
-#: The fingerprint keys the cache on CONTENT, not just path: a
-#: rewritten corpus at the same sf_dir re-seeds instead of serving
-#: stale indexes (the r15 task-3 requirement, applied here from the
-#: start).
-_INGEST_STATE: dict = {}
 
 #: funnel stage labels, shared by counters, card and oracle
 _TEXT_STAGES = [
@@ -415,32 +409,23 @@ def ingest_state(spark, sf_dir) -> str:
     """Seed-once state dir per (session, sf_dir, input fingerprint)
     — the registered rows' self-contained entry: resident = the
     9-in-10 fate slice, keepers = the registered canonical rows."""
-    from chiv_spark.queries.base import REGISTRY
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, ("documents",)),
-    )
-    hit = _INGEST_STATE.get(key)
-    if hit is not None:
-        return hit
-    # a rewritten corpus at the same sf_dir re-seeds under a new
-    # fingerprint: drop the stale state tree instead of accumulating
     import shutil
 
-    for old_key in [k for k in _INGEST_STATE if k[:2] == key[:2]]:
-        shutil.rmtree(_INGEST_STATE.pop(old_key), ignore_errors=True)
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    resident = docs.filter(_fate_col() != 0)
-    keepers = {
-        m: REGISTRY[f"dedup_{name}_canonical"].fn(spark, sf_dir)
-        for m, name in [("img", "image"), ("aud", "audio"), ("vid", "video")]
-    }
-    state_dir = tempfile.mkdtemp(prefix="chiv-ingest-")
-    seed_ingest_state(spark, resident, keepers, state_dir)
-    _INGEST_STATE[key] = state_dir
-    return state_dir
+    from chiv_spark.queries.base import REGISTRY
+
+    def build(_stale):
+        docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+        resident = docs.filter(_fate_col() != 0)
+        keepers = {
+            m: REGISTRY[f"dedup_{name}_canonical"].fn(spark, sf_dir)
+            for m, name in [("img", "image"), ("aud", "audio"), ("vid", "video")]
+        }
+        state_dir = tempfile.mkdtemp(prefix="chiv-ingest-")
+        seed_ingest_state(spark, resident, keepers, state_dir)
+        return state_dir
+
+    fp = state.fingerprint([f"{sf_dir}/documents.parquet"])
+    return state.get_or_build(spark, "ingest", sf_dir, fp, build, shutil.rmtree)
 
 
 def shard_flags(spark, shard, state_dir, exclude_batch: int | None = None):
@@ -922,15 +907,6 @@ def _ing_del_pred():
     return hash64(F.concat(F.lit("ingdel:"), F.col("doc_id").cast("string"))) % 2 == 0
 
 
-#: one outstanding work dir per application: the returned relation is
-#: lazy over this invocation's probe_before/probe_after parquet, so
-#: the NEXT invocation reclaims the previous tree instead of the
-#: builder (the _MEDIA_DEL_STATE one-outstanding-result contract — a
-#: caller holding an earlier invocation's DataFrame must evaluate it
-#: before calling again)
-_INGEST_DEL_PREV: dict = {}
-
-
 def _ingest_delete_oracle() -> str:
     from chiv_spark.queries.mlprep import (
         _capstone_media_ctes,
@@ -999,10 +975,6 @@ def ingest_delete_then_probe(spark, sf_dir):
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     shard = docs.filter(_fate_col() == 0)
     resident = docs.filter(_fate_col() != 0)
-    key = spark.sparkContext.applicationId
-    prev = _INGEST_DEL_PREV.pop(key, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
     # copy-on-write: the shared seed-once state stays pristine for
     # the other ingest rows; the lifecycle mutates its own copy (at
     # 100 TB the forget runs against the real store — the copy is
@@ -1019,7 +991,12 @@ def ingest_delete_then_probe(spark, sf_dir):
     shard_flags(spark, shard, work).select(*cols).write.mode(
         "overwrite"
     ).parquet(f"{work}/probe_after")
-    _INGEST_DEL_PREV[key] = work
+    # one outstanding work dir per application: the returned relation
+    # is lazy over this invocation's probe parquet, so registering it
+    # releases the previous invocation's tree (a caller holding an
+    # earlier invocation's DataFrame must evaluate it before calling
+    # again)
+    state.get_or_build(spark, "ingest_delete", None, None, lambda _stale: work, shutil.rmtree)
     out = None
     for phase in ("before", "after"):
         rel = spark.read.parquet(f"{work}/probe_{phase}").withColumn(

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from chiv_spark.core import state
 from chiv_spark.functions.detmath import det_round, duckdb_det_round
 from chiv_spark.functions.hashing import duckdb_hash64, hash64
 from chiv_spark.functions.vectors import l2_norm_fixed
@@ -835,53 +836,28 @@ def _curation_capstone_oracle() -> str:
     """
 
 
-#: (applicationId, sf_dir) -> (persisted flags, persisted cans): the
-#: capstone report and the survivor dataset card share ONE flag
-#: computation per session — before this cache each row rebuilt the
-#: full eight-stage stack (~35 s each at sf0.1, ~22% of the r14
-#: headline bench doing the same work twice). Keyed by applicationId
-#: (unique per SparkSession lifetime) so a stopped session's stale
-#: persisted handles are never returned to a new one. At 100 TB the
-#: same idea is a checkpoint: write the flags relation to parquet
-#: once and have both reports scan it.
-_CAPSTONE_CACHE: dict = {}
-
-
 def _capstone_flags(spark, sf_dir):
     """The capstone's per-doc survival flags (doc_id, f1..f6) plus the
     persisted canonical media relations — the shared engine core of
-    the capstone report and the survivor dataset card. Computed once
-    per (session, sf_dir, input fingerprint) and persisted: every
-    consumer after the first reads the materialized flags instead of
-    re-running the eight-stage dedup/decontamination stack. The
-    fingerprint (path, size, mtime of the documents/embeddings
-    files — base.table_fingerprint) keys the cache on CONTENT, not
-    just path (r15 verdict task 3): a corpus rewritten at the same
-    sf_dir mid-session — exactly the ingest scenario — re-computes
-    instead of serving stale flags, with the stale persisted handle
-    released. Bench cold/warm semantics are unchanged: bench.py
-    clears the cache before every timed capstone run regardless of
-    key shape."""
-    from chiv_spark.queries.base import REGISTRY, table_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
+    the capstone report and the survivor dataset card. Built once per
+    (session, sf_dir, documents/embeddings fingerprint) and persisted,
+    so every consumer after the first skips the eight-stage stack
+    (~35 s at sf0.1); bench.py clears the ``capstone`` kind before
+    every timed capstone run. At 100 TB the same idea is a checkpoint:
+    write the flags relation to parquet once and have both reports
+    scan it."""
+    return state.get_or_build(
+        spark,
+        "capstone",
         sf_dir,
-        table_fingerprint(sf_dir),
+        state.fingerprint([f"{sf_dir}/documents.parquet", f"{sf_dir}/embeddings.parquet"]),
+        lambda _stale: _build_capstone_flags(spark, sf_dir),
+        lambda fc: [r.unpersist() for r in (fc[0], *fc[1].values())],
     )
-    hit = _CAPSTONE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # same (session, sf_dir) but different content: drop the stale
-    # entry and release its persisted blocks before recomputing
-    for old_key in [k for k in _CAPSTONE_CACHE if k[:2] == key[:2]]:
-        old_flags, old_cans = _CAPSTONE_CACHE.pop(old_key)
-        try:
-            old_flags.unpersist()
-            for c in old_cans.values():
-                c.unpersist()
-        except Exception:  # noqa: BLE001 — a stopped context is fine
-            pass
+
+
+def _build_capstone_flags(spark, sf_dir):
+    from chiv_spark.queries.base import REGISTRY
 
     docs = t(spark, sf_dir, "documents").select("doc_id")
     # the eight stage relations are independent until the final flag
@@ -953,7 +929,6 @@ def _capstone_flags(spark, sf_dir):
             F.col("__md").isNull().alias("f6"),
         )
     ).persist()
-    _CAPSTONE_CACHE[key] = (flags, cans)
     return flags, cans
 
 

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from chiv_spark.core import state
 from chiv_spark.functions.detmath import det_round, duckdb_det_round
 from chiv_spark.functions.hashing import duckdb_hash64, hash64
 from chiv_spark.queries.base import query, t
@@ -915,76 +916,51 @@ def quality_domain_gate_incremental(spark, sf_dir):
     return domain_gate_from_counts(spark, f"{work}/counts", docs, doc_keep)
 
 
-#: (applicationId, sf_dir, input fingerprint) -> persistent counter
-#: store work dir (counts generations + the stream CHECKPOINT). The
-#: checkpoint is what makes the second gating call genuinely
-#: delta-cost (r15 verdict task 6): availableNow over an already-
-#: processed source folds ZERO new batches — Structured Streaming's
-#: own file tracking is the delta detector — so call 2 reads the
-#: persisted store without touching resident documents at all
-#: (pytest-pinned: the store's generation files are byte-untouched
-#: across calls, the dedup_incremental_lsh index-untouched pattern).
-_DOMGATE_STORE: dict = {}
-
-
 def _domain_counts_store(spark, sf_dir) -> str:
-    """Fold-once persistent counter store per (session, sf_dir,
-    content fingerprint): first call folds the corpus stream into
-    counter generations; an unchanged corpus is a dict hit (zero
-    work); an APPEND-ONLY change (every previously-fingerprinted
-    file byte-identical, new files added — the ingest-shard arrival)
-    KEEPS the existing work dir and re-triggers availableNow against
-    its checkpoint, so Structured Streaming's own file tracking folds
-    just the new files — the genuinely delta-cost path (r16 advice:
-    the fingerprint-keyed cache previously re-folded from scratch on
-    any change, making the advertised delta fold unreachable). Only
-    a change to RESIDENT files (rewrite/delete) drops the store and
+    """Fold-once counter store (counts generations + the stream
+    CHECKPOINT) per (session, sf_dir, content fingerprint): an
+    unchanged corpus is a store hit (zero work). An APPEND-ONLY change
+    (every previously-fingerprinted file byte-identical, new files
+    added — the ingest-shard arrival) KEEPS the work dir and
+    re-triggers availableNow against its checkpoint, so Structured
+    Streaming's own file tracking folds just the new files. Only a
+    change to RESIDENT files (rewrite/delete) drops the store and
     re-folds."""
+    import os
     import shutil
     import tempfile
 
-    from chiv_spark.queries.base import table_fingerprint
     from chiv_spark.streaming.domain_stats import domain_stats_stream
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, ("documents",)),
-    )
-    hit = _DOMGATE_STORE.get(key)
-    if hit is not None:
-        return hit
-    work = None
-    for old_key in [k for k in _DOMGATE_STORE if k[:2] == key[:2]]:
-        if set(old_key[2]) <= set(key[2]) and work is None:
+    fp = state.fingerprint([f"{sf_dir}/documents.parquet"])
+
+    def build(stale):
+        docs = t(spark, sf_dir, "documents")
+        # single-FILE layout (the testdata shape): glob the one leaf out
+        # of sf_dir; DIRECTORY layout (the shape appends actually land
+        # in): stream the table dir itself, so a newly-appended part
+        # file is exactly what the checkpoint sees as the delta
+        table_path = os.path.join(sf_dir.rstrip("/"), "documents.parquet")
+        if os.path.isdir(table_path):
+            stream = spark.readStream.schema(docs.schema).parquet(table_path)
+        else:
+            stream = (
+                spark.readStream.schema(docs.schema)
+                .option("pathGlobFilter", "documents.parquet")
+                .parquet(sf_dir.rstrip("/"))
+            )
+        if stale is not None and fp is not None and set(stale[0]) <= set(fp):
             # append-only: reuse the store, the checkpoint is the
             # delta detector
-            work = _DOMGATE_STORE.pop(old_key)
+            work = stale[1]
         else:
-            shutil.rmtree(_DOMGATE_STORE.pop(old_key), ignore_errors=True)
-    import os
+            work = tempfile.mkdtemp(prefix="chiv-domgate-")
+        # run the fold for its side effect (the counter store); the
+        # returned report relation is not consumed here
+        domain_stats_stream(spark, stream, work)
+        return work
 
-    docs = t(spark, sf_dir, "documents")
-    # single-FILE layout (the testdata shape): glob the one leaf out
-    # of sf_dir; DIRECTORY layout (the shape appends actually land
-    # in): stream the table dir itself, so a newly-appended part
-    # file is exactly what the checkpoint sees as the delta
-    table_path = os.path.join(sf_dir.rstrip("/"), "documents.parquet")
-    if os.path.isdir(table_path):
-        stream = spark.readStream.schema(docs.schema).parquet(table_path)
-    else:
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet(sf_dir.rstrip("/"))
-        )
-    if work is None:
-        work = tempfile.mkdtemp(prefix="chiv-domgate-")
-    # run the fold for its side effect (the counter store); the
-    # returned report relation is not consumed here
-    domain_stats_stream(spark, stream, work)
-    _DOMGATE_STORE[key] = work
-    return work
+    return state.get_or_build(spark, "domgate", sf_dir, fp, build, shutil.rmtree)
 
 
 @query(

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from chiv_spark.core import state
+
 TABLES = (
     "region",
     "nation",
@@ -52,55 +54,23 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-#: (applicationId, table path, content fingerprint) -> DataFrame.
-#: ``spark.read.parquet`` costs a ~90 ms JVM round (file listing +
-#: footer/schema read) PER CALL, and composed queries call t() for the
-#: same table several times per construction — the r17 driver bench
-#: paid it on every rep of every row (r18, guide §5 "the driver should
-#: do almost no data work"). DataFrames are immutable, so handing the
-#: same object back is safe; the CONTENT fingerprint (path/size/mtime
-#: of the table's files — the r15 staleness contract) keys the cache
-#: so a corpus rewritten mid-session re-reads instead of serving a
-#: stale file-index snapshot. This memoizes the plan handle only —
-#: never rows; every action still computes from the parquet files.
-_TABLE_CACHE: dict = {}
-
-
-def _table_files_fp(path: str) -> tuple:
-    import os
-
-    out: list[tuple] = []
-    if os.path.isdir(path):
-        for root, dirs, files in os.walk(path):
-            dirs.sort()
-            for fn in sorted(files):
-                fp = os.path.join(root, fn)
-                st = os.stat(fp)
-                out.append((fp, st.st_size, st.st_mtime_ns))
-    elif os.path.exists(path):
-        st = os.stat(path)
-        out.append((path, st.st_size, st.st_mtime_ns))
-    return tuple(out)
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The table's DataFrame, kept per (path, content fingerprint):
+    ``spark.read.parquet`` costs a ~90 ms JVM round per call, and
+    composed queries call t() for one table several times. DataFrames
+    are immutable, so sharing one is safe; a rewritten table re-reads.
+    Only the plan handle is kept, never rows."""
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     if name == "events":
         # execution-time conf: set on every call (cache hit included)
         # so a session whose conf was reset still scans NANOS correctly
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (spark.sparkContext.applicationId, path, _table_files_fp(path))
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # drop stale snapshots of the same table (content changed)
-    for old_key in [k for k in _TABLE_CACHE if k[:2] == key[:2]]:
-        del _TABLE_CACHE[old_key]
-    df = spark.read.parquet(path)
-    if name == "events":
-        df = normalize_event_ts(df)
-    _TABLE_CACHE[key] = df
-    return df
+
+    def build(_stale):
+        df = spark.read.parquet(path)
+        return normalize_event_ts(df) if name == "events" else df
+
+    return state.get_or_build(spark, "table", path, state.fingerprint([path]), build)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, register: bool = True) -> dict[str, DataFrame]:

@@ -207,6 +207,18 @@ class TestDistributedWrites:
         back = spark.read.option("header", True).csv(f"{tmp_path}/{key}")
         assert back.count() == 3
         assert set(back.columns) == set(pg_df.columns)
+        # string edges survive byte-exact (Spark's CSV writer trims
+        # leading/trailing spaces unless told not to)
+        padded = "  two spaces each side  "
+        key = archive_df(
+            spark.createDataFrame([(padded,)], "s string"),
+            str(tmp_path),
+            key="padded",
+            format="csv",
+            distributed=True,
+        )
+        back = spark.read.option("header", True).csv(f"{tmp_path}/{key}")
+        assert [r.s for r in back.collect()] == [padded]
 
     def test_distributed_yaml_parts(self, spark, pg_df, tmp_path):
         import glob

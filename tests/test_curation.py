@@ -471,15 +471,17 @@ class TestBloomMembership:
 
 class TestCapstoneFlagsCache:
     """The capstone report and the survivor dataset card must share
-    ONE flag computation per (session, sf_dir): before the
-    _CAPSTONE_CACHE each row rebuilt the full eight-stage stack
-    (~35 s each at sf0.1 — the r14 verdict's double-compute watch
-    item)."""
+    ONE flag computation per (session, sf_dir): before the capstone
+    entry in the session-state store each row rebuilt the full
+    eight-stage stack (~35 s each at sf0.1 — the r14 verdict's
+    double-compute watch item)."""
 
     def test_flags_computed_once_per_session_and_sf(self, spark):
+        from chiv_spark.core import state
         from chiv_spark.queries import mlprep
 
-        mlprep._CAPSTONE_CACHE.clear()
+        state.clear("capstone")
+        before = state.stats().get("capstone", {"hits": 0, "builds": 0})
         try:
             f1, c1 = mlprep._capstone_flags(spark, SF)
             f2, c2 = mlprep._capstone_flags(spark, SF)
@@ -490,16 +492,14 @@ class TestCapstoneFlagsCache:
             b = REGISTRY["pipeline_capstone_dataset_card"].fn(spark, SF)
             assert a.count() == 10
             assert b.count() > 0
-            # the key carries the applicationId (a NEW session would
-            # rebuild rather than reuse stale handles) AND the input
-            # fingerprint (r15 verdict task 3 — see the test below)
-            from chiv_spark.queries.base import table_fingerprint
-
-            assert set(mlprep._CAPSTONE_CACHE) == {
-                (spark.sparkContext.applicationId, SF, table_fingerprint(SF))
-            }
+            # one build for the session and sf_dir; every other
+            # consumer hits it (a NEW session or a rewritten corpus
+            # rebuilds — tests/test_state.py and the test below)
+            after = state.stats()["capstone"]
+            assert after["builds"] - before["builds"] == 1
+            assert after["hits"] - before["hits"] == 3
         finally:
-            mlprep._CAPSTONE_CACHE.clear()
+            state.clear("capstone")
 
     def test_rewritten_corpus_invalidates_the_cache(self, spark, tmp_path):
         """r15 verdict task 3: the cache key carries a content
@@ -508,11 +508,12 @@ class TestCapstoneFlagsCache:
         serving the stale relation — and drops the stale entry."""
         import shutil
 
+        from chiv_spark.core import state
         from chiv_spark.queries import mlprep
 
         sf_copy = str(tmp_path / "sfcopy")
         shutil.copytree(SF, sf_copy)
-        mlprep._CAPSTONE_CACHE.clear()
+        state.clear("capstone")
         try:
             f1, _ = mlprep._capstone_flags(spark, sf_copy)
             n1 = f1.count()
@@ -526,9 +527,13 @@ class TestCapstoneFlagsCache:
                 f"'{sf_copy}/documents.parquet' (FORMAT PARQUET)"
             )
             spark.catalog.clearCache()
+            released = state.stats()["capstone"]["releases"]
             f2, _ = mlprep._capstone_flags(spark, sf_copy)
             assert f2 is not f1  # recomputed, not the stale handle
             assert f2.count() < n1  # reflects the rewritten corpus
-            assert len(mlprep._CAPSTONE_CACHE) == 1  # stale entry gone
+            # stale entry gone: released once, and one entry is left
+            assert state.stats()["capstone"]["releases"] == released + 1
+            state.clear("capstone")
+            assert state.stats()["capstone"]["releases"] == released + 2
         finally:
-            mlprep._CAPSTONE_CACHE.clear()
+            state.clear("capstone")

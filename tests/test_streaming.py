@@ -2242,10 +2242,8 @@ class TestPersistentDomainStore:
 
         from pyspark.sql import functions as F
 
-        from chiv_spark.queries.quality import (
-            _DOMGATE_STORE,
-            _domain_counts_store,
-        )
+        from chiv_spark.core import state
+        from chiv_spark.queries.quality import _domain_counts_store
         from chiv_spark.streaming.domain_stats import read_counts
 
         schema = "doc_id long, text string, source string"
@@ -2256,6 +2254,7 @@ class TestPersistentDomainStore:
             [(1, good, "sA"), (2, good + " x", "sB")], schema
         ).coalesce(1).write.parquet(str(tbl))
 
+        released = state.stats().get("domgate", {}).get("releases", 0)
         work1 = _domain_counts_store(spark, str(sf))
         n1 = read_counts(spark, f"{work1}/counts").agg(F.sum("n")).collect()[0][0]
         assert n1 == 2
@@ -2309,5 +2308,9 @@ class TestPersistentDomainStore:
             for r in read_counts(spark, f"{work3}/counts").collect()
         }
         assert "sC" in srcs
+        # the rewrite released the old store exactly once; the append
+        # did not
+        assert state.stats()["domgate"]["releases"] == released + 1
+        assert not os.path.exists(work1)
         # session-store hygiene for other tests
-        _DOMGATE_STORE.clear()
+        state.clear("domgate")

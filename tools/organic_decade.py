@@ -186,16 +186,6 @@ def build_organic(out_dir: str = ORGANIC_DIR, n_docs: int = 50_000,
     pq.write_table(part, f"{out_dir}/part.parquet")
 
 
-def _clear_capstone_cache() -> None:
-    from chiv_spark.queries.mlprep import _CAPSTONE_CACHE
-
-    for flags, cans in _CAPSTONE_CACHE.values():
-        flags.unpersist()
-        for c in cans.values():
-            c.unpersist()
-    _CAPSTONE_CACHE.clear()
-
-
 #: the fourth-4x embeddings point (r15 verdict task 8): docs stay at
 #: the organic-sf1 count (the ANN rows read only embeddings; keeping
 #: documents identical isolates the embeddings-ladder effect)
@@ -340,6 +330,7 @@ def repeated_arrivals(n_folds: int = 8) -> None:
 
 
 def main() -> None:
+    from chiv_spark.core import state
     from chiv_spark.queries import REGISTRY
     from chiv_spark.session import get_spark
 
@@ -368,11 +359,11 @@ def main() -> None:
         ns, ts, outs = [], [], []
         for d in (SF001, SF01, ORGANIC_DIR):
             n = n_of(d, table)
-            _clear_capstone_cache()
+            state.clear("capstone")
             t0 = time.perf_counter()
             out = REGISTRY[name].fn(spark, d).count()  # warmup + volume
             warm = time.perf_counter() - t0
-            _clear_capstone_cache()
+            state.clear("capstone")
             t0 = time.perf_counter()
             REGISTRY[name].fn(spark, d).write.format("noop").mode(
                 "overwrite"
