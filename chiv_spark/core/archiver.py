@@ -37,41 +37,95 @@ from chiv_spark.formats import FORMATS
 from chiv_spark.formats.base import Formatter, FormatterFunc
 
 
-def _csv_partition_encoder(dtypes: list[T.DataType], null: str | None):
+# Spark types whose cells the fast-path encoders render without the
+# per-value isinstance chain, by kind (exact classes: a column's
+# renderer is looked up by ``type(dtype)``)
+_KINDS = {
+    T.ByteType: "int",
+    T.ShortType: "int",
+    T.IntegerType: "int",
+    T.LongType: "int",
+    T.FloatType: "float",
+    T.DoubleType: "float",
+    T.DecimalType: "decimal",
+    T.BooleanType: "bool",
+    T.DateType: "date",
+    T.TimestampType: "timestamp",
+    T.TimestampNTZType: "timestamp",
+    T.StringType: "str",
+}
+
+
+def _column_renderers(dtypes: list[T.DataType], placeholders: list[object], render, by_kind: dict):
+    """Per-column cell renderers for the single-object fast paths.
+
+    A column whose kind (``_KINDS``) is in ``by_kind`` renders its
+    values with that function, which must return what ``render`` (the
+    format's per-value renderer) returns for a value of that type;
+    other columns use ``render``. A NULL cell renders as its column's
+    placeholder through ``render`` (``render(None)`` without one). A
+    placeholder that did not parse as its column's type, or cannot be
+    rendered, raises only when a NULL reaches that column: the
+    reference substitutes and parses at format time
+    (chiv.go:175-181)."""
+    fns = []
+    for dt, ph in zip(dtypes, placeholders):
+        fn = by_kind.get(_KINDS.get(type(dt)), render)
+        try:
+            if isinstance(ph, _BadPlaceholder):
+                raise ph.err
+            nul = render(ph)
+        except ValueError as err:
+
+            def cell(v, fn=fn, err=err):
+                if v is None:
+                    raise err
+                return fn(v)
+
+        else:
+
+            def cell(v, fn=fn, nul=nul):
+                return nul if v is None else fn(v)
+
+        fns.append(cell)
+    return fns
+
+
+def _bool_text(v: bool) -> str:
+    return "true" if v else "false"
+
+
+def _csv_partition_encoder(dtypes: list[T.DataType], placeholders: list[object]):
     """Executor-side CSV row encoding for the single-object fast path:
-    one UTF-8 chunk per ~10k rows, rows in partition order. Per-column
-    encoders are specialized from the schema — numeric/bool/date/
-    timestamp renderings can never contain a quotable character
-    (comma, quote, CR/LF, leading Go-space, or the literal ``\\.``),
-    so only string-ish columns pay the quote scan. Output is
+    one UTF-8 chunk per ~10k rows, rows in partition order. Numeric/
+    bool/date/timestamp renderings can never contain a quotable
+    character (comma, quote, CR/LF, leading Go-space, or the literal
+    ``\\.``), so only string-ish columns pay the quote scan. Output is
     byte-identical to CsvFormatter's per-row path (golden-file tests
     pin this)."""
 
     def enc(rows):
+        from chiv_spark.core.archiver import _bool_text, _column_renderers
         from chiv_spark.formats.csv_format import _quote_field
         from chiv_spark.formats.encode import go_float_str, rfc3339, to_csv_str
 
-        nul = "" if null is None else _quote_field(null)
-
-        def col_fn(dt: T.DataType):
-            if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-                return lambda v: nul if v is None else str(v)
-            if isinstance(dt, (T.FloatType, T.DoubleType)):
-                return lambda v: nul if v is None else go_float_str(v)
-            if isinstance(dt, T.DecimalType):
-                return lambda v: nul if v is None else str(v)
-            if isinstance(dt, T.BooleanType):
-                return lambda v: nul if v is None else ("true" if v else "false")
-            if isinstance(dt, T.TimestampType):
-                return lambda v: nul if v is None else rfc3339(v)
-            if isinstance(dt, T.DateType):
-                return lambda v: nul if v is None else v.isoformat()
-            return lambda v: nul if v is None else _quote_field(to_csv_str(v))
-
-        fns = [col_fn(dt) for dt in dtypes]
+        fns = _column_renderers(
+            dtypes,
+            placeholders,
+            lambda v: _quote_field(to_csv_str(v)),
+            {
+                "int": str,
+                "float": go_float_str,
+                "decimal": str,
+                "bool": _bool_text,
+                "date": lambda v: v.isoformat(),
+                "timestamp": rfc3339,
+                "str": _quote_field,
+            },
+        )
         buf: list[str] = []
         for row in rows:
-            buf.append(",".join(f(v) for f, v in zip(fns, row)))
+            buf.append(",".join([f(v) for f, v in zip(fns, row)]))
             if len(buf) >= 10000:
                 yield ("\n".join(buf) + "\n").encode("utf-8")
                 buf = []
@@ -89,29 +143,38 @@ def _csv_partition_encoder(dtypes: list[T.DataType], null: str | None):
 _ROW_ERR = "chiv-format-row"
 
 
-def _json_partition_encoder(columns: list[str], placeholders: list[object], null: str | None):
+def _json_partition_encoder(dtypes: list[T.DataType], columns: list[str], placeholders: list[object]):
     """Executor-side JSON row encoding for the single-object fast
     path: each chunk is up to ~10k comma-joined compact objects (keys
-    sorted, same json_escape/json_value renderings as JsonFormatter);
-    the driver writes ``[``/``]`` framing and a single ``,`` between
-    consecutive chunks, so the bytes match the per-row path exactly
-    (golden-file tests pin this)."""
+    sorted, same renderings as JsonFormatter's json_value); the driver
+    writes ``[``/``]`` framing and a single ``,`` between consecutive
+    chunks, so the bytes match the per-row path exactly (golden-file
+    tests pin this)."""
     order = sorted(range(len(columns)), key=lambda i: columns[i])
 
     def enc(rows):
-        from chiv_spark.core.archiver import _ROW_ERR, _substitute
-        from chiv_spark.formats.encode import json_escape, json_value
+        from chiv_spark.core.archiver import _ROW_ERR, _bool_text, _column_renderers
+        from chiv_spark.formats.encode import go_float_str, json_escape, json_value, rfc3339
 
-        names = [json_escape(columns[i]) for i in order]
+        fns = _column_renderers(
+            dtypes,
+            placeholders,
+            json_value,
+            {
+                "int": str,
+                "float": go_float_str,
+                "decimal": lambda v: go_float_str(float(v)),
+                "bool": _bool_text,
+                "date": lambda v: '"' + v.isoformat() + '"',
+                "timestamp": lambda v: '"' + rfc3339(v) + '"',
+                "str": json_escape,
+            },
+        )
+        cells = [(json_escape(columns[i]) + ":", fns[i], i) for i in order]
         buf: list[str] = []
         for row in rows:
             try:
-                rec = row if null is None else _substitute(row, placeholders, null)
-                buf.append(
-                    "{" + ",".join(
-                        f"{names[k]}:{json_value(rec[i])}" for k, i in enumerate(order)
-                    ) + "}"
-                )
+                buf.append("{" + ",".join([k + f(row[i]) for k, f, i in cells]) + "}")
             except Exception as e:  # noqa: BLE001 — marked for stage re-wrap
                 raise RuntimeError(f"{_ROW_ERR}: {e}") from e
             if len(buf) >= 10000:
@@ -123,27 +186,39 @@ def _json_partition_encoder(columns: list[str], placeholders: list[object], null
     return enc
 
 
-def _yaml_partition_encoder(columns: list[str], placeholders: list[object], null: str | None):
+def _yaml_partition_encoder(dtypes: list[T.DataType], columns: list[str], placeholders: list[object]):
     """Executor-side YAML row encoding: one ``- key: value`` block map
-    per row via the same _yaml_scalar renderings as YamlFormatter;
+    per row with the same renderings as YamlFormatter's _yaml_scalar;
     rows are self-delimiting so the driver concatenates chunks with no
     framing."""
     order = sorted(range(len(columns)), key=lambda i: columns[i])
 
     def enc(rows):
-        from chiv_spark.core.archiver import _ROW_ERR, _substitute
-        from chiv_spark.formats.yaml_format import _yaml_scalar
+        from chiv_spark.core.archiver import _ROW_ERR, _bool_text, _column_renderers
+        from chiv_spark.formats.encode import go_g_float_str, rfc3339
+        from chiv_spark.formats.yaml_format import _yaml_scalar, _yaml_str
 
+        fns = _column_renderers(
+            dtypes,
+            placeholders,
+            _yaml_scalar,
+            {
+                "int": str,
+                "float": go_g_float_str,
+                "decimal": lambda v: go_g_float_str(float(v)),
+                "bool": _bool_text,
+                "date": lambda v: '"' + v.isoformat() + '"',
+                "timestamp": lambda v: '"' + rfc3339(v) + '"',
+                "str": _yaml_str,
+            },
+        )
+        cells = [
+            (("- " if k == 0 else "  ") + columns[i] + ": ", fns[i], i) for k, i in enumerate(order)
+        ]
         buf: list[str] = []
         for row in rows:
             try:
-                rec = row if null is None else _substitute(row, placeholders, null)
-                buf.append(
-                    "".join(
-                        f"{'- ' if k == 0 else '  '}{columns[i]}: {_yaml_scalar(rec[i])}\n"
-                        for k, i in enumerate(order)
-                    )
-                )
+                buf.append("".join([p + f(row[i]) + "\n" for p, f, i in cells]))
             except Exception as e:  # noqa: BLE001 — marked for stage re-wrap
                 raise RuntimeError(f"{_ROW_ERR}: {e}") from e
             if len(buf) >= 10000:
@@ -381,12 +456,13 @@ class Archiver:
             # one chunk (toLocalIterator). The open()/close() framing
             # (CSV header, JSON brackets) still runs on the driver via
             # the formatter itself.
+            dtypes = [f.dataType for f in schema.fields]
             if fmt_func is FORMATS.get("csv"):
-                fast = ("", _csv_partition_encoder([f.dataType for f in schema.fields], null))
+                fast = ("", _csv_partition_encoder(dtypes, placeholders))
             elif fmt_func is FORMATS.get("json"):
-                fast = (",", _json_partition_encoder(df.columns, placeholders, null))
+                fast = (",", _json_partition_encoder(dtypes, df.columns, placeholders))
             elif fmt_func is FORMATS.get("yaml"):
-                fast = ("", _yaml_partition_encoder(df.columns, placeholders, null))
+                fast = ("", _yaml_partition_encoder(dtypes, df.columns, placeholders))
             else:
                 fast = None
             if fast is not None:
@@ -403,31 +479,36 @@ class Archiver:
                 # A LIMIT (or coalesce) upstream collapses the plan to
                 # ONE partition, so the Python row encode — the hot
                 # loop of this path — runs on a single core while the
-                # rest idle (measured: 100k lineitem rows to YAML,
-                # ~2.4 s of encode on one core). When the input is
-                # single-partitioned and the size estimate clears
+                # rest idle. When the input is single-partitioned and
+                # its size estimate clears
                 # ``spark.chiv.archive.spreadBytes`` (default 8 MiB),
                 # range-repartition on a sequential row id: global
                 # order (and therefore the output bytes) is preserved
                 # — range partitions of a totally ordered unique key
                 # concatenate back in order — while the encode fans
-                # out. The fan-out is deliberately SMALL
-                # (``spark.chiv.archive.spreadParts``, default 2 since
-                # r18): toLocalIterator schedules one job per
-                # partition, and the r18 same-session sweep at BOTH
-                # core counts (100k lineitem rows, best-of-5) measured
-                # yaml off/2/4/8 = 5.2/3.6/4.6/7.5 s at 32 cores and
-                # 3.7/2.6/2.8/3.0 at 8 — two partitions give the
-                # driver sink one prefetched chunk to overlap with,
-                # and anything wider just queues jobs. Small inputs
-                # (the byte-parity goldens) stay on the untouched
-                # one-partition path; real corpus-scale inputs arrive
-                # multi-partitioned and never enter this branch.
+                # out. The spread is not free: a range-sample job, a
+                # shuffle, and a recompute of everything upstream
+                # (for ``ORDER BY … LIMIT``, the top-k over the whole
+                # input). The estimate is the input files' size capped
+                # by the plan's row bound × default row size
+                # (core/sizing.py), so a LIMIT is charged for the rows
+                # it can return, not the file it reads. Measured
+                # crossover (YAML, sf0.1 lineitem, 4 cores): a
+                # 6,000-row LIMIT (0.65 MB estimate) took 0.8-1.9 s in
+                # 1 job unspread against 1.4-1.6 s in 4 jobs spread;
+                # 100k rows (10.8 MB) took 3.7-4.1 s spread against
+                # 4.3-5.6 s unspread. The r18 sweep measured 100k rows
+                # with yaml off/2/4/8 parts = 5.2/3.6/4.6/7.5 s at 32
+                # cores and 3.7/2.6/2.8/3.0 at 8. Hence the SMALL fan-out
+                # (``spark.chiv.archive.spreadParts``, default 2):
+                # toLocalIterator schedules one job per partition, two
+                # partitions give the driver sink one prefetched chunk
+                # to overlap with, and anything wider just queues jobs.
+                # Real corpus-scale inputs arrive multi-partitioned and
+                # never enter this branch.
                 from chiv_spark.core.sizing import relation_size_est
 
                 src = df
-                # memoized input-file-size signal (r18): replaces the
-                # per-call optimizedPlan().stats() optimizer run
                 est = relation_size_est(df)
                 if est >= 1 << 62:
                     # unknown size: keep the untouched one-partition

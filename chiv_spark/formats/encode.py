@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import math
+import re
 from decimal import Decimal
 
 
@@ -56,24 +57,31 @@ def go_g_float_str(f: float) -> str:
     if math.isnan(f) or math.isinf(f):
         raise ValueError(f"cannot encode non-finite float {f!r}")
     f = float(f)
-    neg = math.copysign(1.0, f) < 0
     if f == 0.0:
-        return "-0" if neg else "0"
+        return "-0" if math.copysign(1.0, f) < 0 else "0"
     # Python repr is the shortest round-trip decimal — same digits Go
-    # computes for shortest 'g'
-    sign, digits, dexp = Decimal(repr(f)).as_tuple()
-    digs = "".join(map(str, digits)).rstrip("0") or "0"
-    exp = dexp + len(digits) - 1  # decimal exponent of the leading digit
+    # computes for shortest 'g'; its forms are ``123.45``, ``0.001``
+    # and ``1.5e-05`` (one digit before the point when it has an
+    # exponent)
+    r = repr(f)
+    sign = "-" if r[0] == "-" else ""
+    mant, _, e = r.lstrip("-").partition("e")
+    ip, _, fp = mant.partition(".")
+    digits = ip + fp
+    lead = digits.lstrip("0")
+    # decimal exponent of the leading nonzero digit
+    exp = len(ip) - 1 - (len(digits) - len(lead)) + int(e or 0)
+    digs = lead.rstrip("0")
     if exp < -4 or exp >= 6:
         mant = digs[0] + ("." + digs[1:] if len(digs) > 1 else "")
-        return f"{'-' if sign else ''}{mant}e{'+' if exp >= 0 else '-'}{abs(exp):02d}"
+        return f"{sign}{mant}e{'+' if exp >= 0 else '-'}{abs(exp):02d}"
     if exp >= len(digs) - 1:
         body = digs + "0" * (exp - (len(digs) - 1))
     elif exp >= 0:
         body = digs[: exp + 1] + "." + digs[exp + 1 :]
     else:
         body = "0." + "0" * (-exp - 1) + digs
-    return ("-" if sign else "") + body
+    return sign + body
 
 
 def rfc3339(ts: _dt.datetime) -> str:
@@ -112,8 +120,15 @@ def to_csv_str(v: object) -> str:
     return str(v)
 
 
+# every character json_escape rewrites; a string without one is
+# emitted as is (most column values)
+_JSON_ESCAPED = re.compile('[\\x00-\\x1f"\\\\<>&\u2028\u2029]')
+
+
 def json_escape(s: str) -> str:
     """Go-compatible JSON string escaping (incl. HTML escapes)."""
+    if not _JSON_ESCAPED.search(s):
+        return '"' + s + '"'
     out = ['"']
     for ch in s:
         if ch == '"':
@@ -128,7 +143,7 @@ def json_escape(s: str) -> str:
             out.append("\\t")
         elif ch in "<>&":
             out.append(f"\\u{ord(ch):04x}")
-        elif ch in (" ", " "):
+        elif ch in ("\u2028", "\u2029"):
             out.append(f"\\u{ord(ch):04x}")
         elif ord(ch) < 0x20:
             out.append(f"\\u{ord(ch):04x}")

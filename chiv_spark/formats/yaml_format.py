@@ -40,6 +40,11 @@ def _plain_ok(s: str) -> bool:
 _BOOLISH = {"true", "false", "yes", "no", "on", "off", "null", "~", ""}
 _TIMESTAMPISH = re.compile(r"^\d{4}-\d{1,2}-\d{1,2}([Tt ].*)?$")
 _NUMBERISH = re.compile(r"^[-+]?(\d[\d_]*\.?[\d_]*([eE][-+]?\d+)?|\.\d+|0x[0-9a-fA-F]+|0o?[0-7]+)$")
+# _plain_ok restricted to ASCII, as one regex: most strings take this
+# path, and it settles them without a per-character Python loop
+_PLAIN_ASCII = re.compile(r"[A-Za-z0-9_][A-Za-z0-9_ ./()-]*")
+# C0 controls, DEL and C1 controls: these force double-quoted style
+_CONTROL = re.compile(r"[\x00-\x1f\x7f-\x9f]")
 
 
 def _yaml_scalar(v: object) -> str:
@@ -59,8 +64,17 @@ def _yaml_scalar(v: object) -> str:
         return '"' + v.isoformat() + '"'
     if isinstance(v, (bytes, bytearray)):
         v = bytes(v).decode("utf-8", errors="replace")
-    s = str(v)
-    if "\n" in s or any(ord(c) < 0x20 or 0x7F <= ord(c) <= 0x9F for c in s):
+    return _yaml_str(str(v))
+
+
+def _yaml_str(s: str) -> str:
+    """A string scalar: plain when yaml.v2 would read it back as the
+    same string, else single-quoted, or double-quoted for control
+    characters and timestamp-like strings."""
+    plain = not s.endswith(" ") and s.lower() not in _BOOLISH and not _NUMBERISH.match(s)
+    if plain and _PLAIN_ASCII.fullmatch(s) and not _TIMESTAMPISH.match(s):
+        return s
+    if _CONTROL.search(s):
         # control chars force double-quoted style (checked before every
         # other style — raw control chars are invalid YAML anywhere);
         # every control char gets an escape
@@ -84,12 +98,7 @@ def _yaml_scalar(v: object) -> str:
     if _TIMESTAMPISH.match(s):
         # yaml.v2 double-quotes strings that would resolve as timestamps
         return '"' + s.replace("\\", "\\\\").replace('"', '\\"') + '"'
-    if (
-        _plain_ok(s)
-        and s.lower() not in _BOOLISH
-        and not _NUMBERISH.match(s)
-        and not s.endswith(" ")
-    ):
+    if plain and _plain_ok(s):
         return s
     return "'" + s.replace("'", "''") + "'"
 

@@ -88,9 +88,9 @@ def _spread_ids(
     from chiv_spark.core.sizing import relation_size_est
 
     spark = ids.sparkSession
-    # memoized input-file-size signal (r18): the per-call
-    # optimizedPlan().stats() probe paid a driver-side optimizer run
-    # at every codec entry point of every rep
+    # input files' size, capped by the plan's row bound, instead of an
+    # optimizedPlan().stats() probe at every codec entry point of
+    # every rep
     est = relation_size_est(ids)
     gate = int(spark.conf.get("spark.chiv.media.spreadBytes", str(1 << 28)))
     if est < gate:

@@ -118,9 +118,9 @@ def quality_verdict(docs):
     sized = docs.select("doc_id", F.trim(F.col("text")).alias("tx")).filter(
         F.col("tx").isNotNull()
     )
-    # memoized input-file-size signal (r18): the previous per-call
-    # optimizedPlan().stats() probe ran the Catalyst optimizer on the
-    # driver for every verdict branch of every composed consumer —
+    # input files' size, capped by the plan's row bound (unbounded
+    # here: the corpus file total), instead of an optimizedPlan()
+    # .stats() probe per verdict branch of every composed consumer —
     # the r17 driver bench's quality-family regression
     est = relation_size_est(sized)
     gate = int(

@@ -391,3 +391,84 @@ class TestExecutorSideJsonYaml:
         df = spark.createDataFrame([], "id long, s string")
         key = Archiver(spark).archive_df(df, str(tmp_path), format="json", key="empty.json")
         assert (tmp_path / key).read_bytes() == b"[]"
+
+
+class TestSpreadPath:
+    """The single-object encode spread: a one-partition frame whose
+    size estimate clears ``spark.chiv.archive.spreadBytes`` is
+    range-repartitioned so the encode runs in parallel. The bytes must
+    not change, and a LIMIT is charged for the rows it can return."""
+
+    @pytest.fixture(scope="class")
+    def one_part_df(self, spark):
+        from pyspark.sql import functions as F
+
+        return spark.range(6_000, numPartitions=1).select(
+            F.col("id"),
+            F.when(F.col("id") % 5 == 0, None)
+            .otherwise(F.concat(F.lit('na"me, é '), F.col("id").cast("string")))
+            .alias("s"),
+            (F.col("id") * 1.5).alias("v"),
+            F.when(F.col("id") % 7 == 0, None)
+            .otherwise((F.col("id") / 100).cast("decimal(15,2)"))
+            .alias("d"),
+            F.when(F.col("id") % 3 == 0, None).otherwise(F.col("id") % 2 == 0).alias("b"),
+            F.expr("date_add(date'2024-01-01', cast(id as int))").alias("day"),
+            F.expr(
+                "timestamp'2024-01-01 00:00:00' + make_interval(0,0,0,0,0,0,id)"
+            ).alias("ts"),
+        )
+
+    @staticmethod
+    def _archive(spark, df, bucket, fmt, key, null, group) -> tuple[bytes, int]:
+        """(object bytes, Spark jobs the archive ran)."""
+        Archiver(spark).archive_df(df, bucket, format=fmt, key=key, null=null, job_group=group)
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+        return read_obj(bucket, key), len(jobs)
+
+    @pytest.mark.parametrize("fmt", ["csv", "json", "yaml"])
+    @pytest.mark.parametrize("null", [None, "0"])
+    def test_spread_bytes_match_unspread(self, spark, one_part_df, tmp_path, fmt, null):
+        tag = f"{fmt}-{null}"
+        plain, plain_jobs = self._archive(
+            spark, one_part_df, str(tmp_path), fmt, f"plain.{fmt}", null, f"plain-{tag}"
+        )
+        spark.conf.set("spark.chiv.archive.spreadBytes", "0")
+        try:
+            spread, spread_jobs = self._archive(
+                spark, one_part_df, str(tmp_path), fmt, f"spread.{fmt}", null, f"spread-{tag}"
+            )
+        finally:
+            spark.conf.unset("spark.chiv.archive.spreadBytes")
+        assert spread_jobs > plain_jobs  # the spread form really ran
+        assert spread == plain
+
+    def test_limit_over_large_file_archives_in_one_job(self, spark, tmp_path):
+        """An ``ORDER BY … LIMIT`` over a file above the 8 MiB gate
+        returns ~40 KB: it must not pay the spread's sample job,
+        shuffle and top-k recompute."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        rows, width = 80_000, 160
+        rng = np.random.default_rng(0)
+        alphabet = np.frombuffer(
+            b"ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789+/", dtype=np.uint8
+        )
+        blob = alphabet[rng.integers(0, len(alphabet), rows * width)].tobytes().decode()
+        path = tmp_path / "wide.parquet"
+        pq.write_table(
+            pa.table({
+                "k": np.arange(rows),
+                "s": [blob[i * width : (i + 1) * width] for i in range(rows)],
+            }),
+            path,
+        )
+        assert path.stat().st_size > 8 << 20  # above the default spread gate
+        df = spark.read.parquet(str(path)).orderBy("k").limit(1_000)
+        body, jobs = self._archive(
+            spark, df, str(tmp_path), "yaml", "limit.yaml", None, "limit-one-job"
+        )
+        assert jobs == 1
+        assert body.count(b"\n- ") + body.startswith(b"- ") == 1_000
