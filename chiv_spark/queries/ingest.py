@@ -48,7 +48,6 @@ Stage semantics and why delta-restriction is EXACT per stage:
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 from pyspark.sql import functions as F
@@ -57,13 +56,8 @@ from chiv_spark.core import state
 from chiv_spark.functions.hashing import hash64
 from chiv_spark.operators import dedup
 from chiv_spark.queries.base import query, t
-from chiv_spark.streaming.dedup_index import (
-    SEED_BATCH,
-    anti_join_tombstones,
-    compact_index,
-    read_tombstones,
-    write_tombstones,
-)
+from chiv_spark.streaming import store
+from chiv_spark.streaming.store import SEED_BATCH
 
 #: the standing 1-in-10 stable-hash arrival fate (queries/llm.py)
 from chiv_spark.queries.llm import _INC_FATE
@@ -244,7 +238,7 @@ def _resident_flags(spark, resident, keepers):
 # --------------------------------------------------------------------------
 # The persisted state's GENERATION layout (r16 verdict tasks 2+3).
 #
-# Every deletable tier rides the streaming.dedup_index conventions:
+# Every deletable tier is a generational store (streaming/store.py):
 # rows live under (pb, src_batch) directory partitions, each fold is
 # one generation written with DYNAMIC partition overwrite keyed by
 # batch_id (a crashed-and-retried fold REPLACES its own partitions —
@@ -279,58 +273,11 @@ def _pb_of(col: str):
     return F.pmod(F.col(col), F.lit(ING_PB)).cast("int")
 
 
-def _write_gen(rel, out_dir: str, batch_id: int) -> None:
-    import json
-
-    rel = rel.withColumn("src_batch", F.lit(int(batch_id)))
-    (
-        # one file per (pb, src_batch) dir instead of one sliver per
-        # upstream task per dir (guide §6 — the suffix tier measured
-        # ~1,000 tiny files per generation without this)
-        rel.repartition(F.col("pb"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pb", "src_batch")
-        .parquet(out_dir)
-    )
-    # schema sidecar (leading underscore: invisible to partition
-    # discovery, the _tombstones convention): a generation can be
-    # legitimately EMPTY (no eval-fated doc in a tiny shard — a
-    # partitioned write of zero rows leaves a file-less dir that
-    # schema inference rejects), and the reader must survive that
-    # state. Local-FS like the rest of the test layout; a cloud
-    # deployment gets this from the table format's metadata.
-    os.makedirs(out_dir, exist_ok=True)
-    with open(os.path.join(out_dir, "_schema.json"), "w") as fh:
-        fh.write(json.dumps(rel.schema.jsonValue()))
-
-
-def _tier_schema(state_dir: str, tier: str):
-    import json
-
-    from pyspark.sql.types import StructType
-
-    p = os.path.join(state_dir, tier, "_schema.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return StructType.fromJson(json.loads(fh.read()))
-
-
 def _read_tier(spark, state_dir: str, tier: str, exclude_batch: int | None = None):
-    """A tier's visible relation: all generations minus the reader's
-    own (the replay guard — a retried fold must not self-join the
-    generation it already wrote) minus tombstoned ids whose
-    generation falls inside the tombstone's scope. Bookkeeping
-    columns dropped — downstream operators see the builder schema."""
-    schema = _tier_schema(state_dir, tier)
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    rel = reader.parquet(f"{state_dir}/{tier}")
-    if exclude_batch is not None:
-        rel = rel.filter(F.col("src_batch") != int(exclude_batch))
-    tomb = read_tombstones(spark, f"{state_dir}/{tier}")
-    if tomb is not None:
-        rel = anti_join_tombstones(rel, tomb, "doc_id")
+    """A tier's visible relation (:func:`store.read`: the reader's own
+    generation and tombstoned rows left out) with the bookkeeping
+    columns dropped, so downstream operators see the builder schema."""
+    rel = store.read(spark, f"{state_dir}/{tier}", exclude_batch=exclude_batch)
     return rel.drop("pb", "src_batch")
 
 
@@ -341,36 +288,41 @@ def _fold_tiers(spark, docs, state_dir: str, batch_id: int) -> None:
     drift."""
     from chiv_spark.operators.suffixes import window_index
 
-    _write_gen(
+    store.write_gen(
         dedup.paragraph_index(docs).withColumn("pb", _pb_of("h")),
         f"{state_dir}/para_index",
         batch_id,
+        "pb",
     )
-    _write_gen(window_index(docs), f"{state_dir}/win_index", batch_id)
-    _write_gen(
+    store.write_gen(window_index(docs), f"{state_dir}/win_index", batch_id, "pb")
+    store.write_gen(
         dedup.minhash_band_index(docs).withColumn("pb", _pb_of("bh")),
         f"{state_dir}/band_index",
         batch_id,
+        "pb",
     )
     smp = _smp_col()
-    _write_gen(
+    store.write_gen(
         dedup.shingles(docs.filter(smp < 2), words=4).withColumn(
             "pb", F.pmod(hash64(F.col("shingle")), F.lit(ING_PB)).cast("int")
         ),
         f"{state_dir}/eval_grams",
         batch_id,
+        "pb",
     )
-    _write_gen(
+    store.write_gen(
         dedup.minhash_band_index(docs.filter(smp < 2)).withColumn(
             "pb", _pb_of("bh")
         ),
         f"{state_dir}/eval_bands",
         batch_id,
+        "pb",
     )
-    _write_gen(
+    store.write_gen(
         docs.select("doc_id", "text").withColumn("pb", _pb_of("doc_id")),
         f"{state_dir}/text_store",
         batch_id,
+        "pb",
     )
 
 
@@ -384,12 +336,13 @@ def seed_ingest_state(spark, resident, keepers, state_dir) -> None:
     _fold_tiers(spark, resident, state_dir, SEED_BATCH)
     for m, rel in keepers.items():
         rel.write.mode("overwrite").parquet(f"{state_dir}/keepers_{m}")
-    _write_gen(
+    store.write_gen(
         _resident_flags(spark, resident, keepers).withColumn(
             "pb", _pb_of("doc_id")
         ),
         f"{state_dir}/flags_store",
         SEED_BATCH,
+        "pb",
     )
     # the seed counters derive FROM the stored flags (one compute,
     # and the counters provably equal what a later negation subtracts)
@@ -531,10 +484,11 @@ def fold_shard(spark, shard, state_dir, batch_id: int) -> None:
     whole — so replaying the same (shard, batch_id) leaves the state
     (and the card) bit-identical, pytest-pinned."""
     flags = shard_flags(spark, shard, state_dir, exclude_batch=batch_id)
-    _write_gen(
+    store.write_gen(
         flags.withColumn("pb", _pb_of("doc_id")),
         f"{state_dir}/flags_store",
         batch_id,
+        "pb",
     )
     # counters derive from the generation just written (read-back:
     # one materialization, and negation-by-provenance stays exact)
@@ -570,7 +524,7 @@ def ingest_forget(spark, state_dir, doc_ids, request_id: int = 0) -> None:
       nominating suffix twins, its bands stop emitting near-dup
       pairs, its eval grams/bands leave the decon dims, its raw text
       is never re-read, and its flag rows leave the provenance
-      store. Generation-scoped (dedup_index.write_tombstones): a
+      store. Generation-scoped (store.forget): a
       re-ingest of the same id after the delete lands in a later
       generation and stays visible.
 
@@ -592,7 +546,7 @@ def ingest_forget(spark, state_dir, doc_ids, request_id: int = 0) -> None:
         f"{state_dir}/counters/gen=d{int(request_id)}"
     )
     # the seven tombstone folds touch disjoint tier directories and
-    # each is a tiny job (a max-src_batch read + a 1-file write) that
+    # each is a tiny job (a 1-file write) that
     # leaves most of the cluster idle — overlap them (guide §2.6:
     # submit independent jobs from a small pool so one job's tail
     # back-fills the next's tasks). Any thread's exception propagates
@@ -604,7 +558,7 @@ def ingest_forget(spark, state_dir, doc_ids, request_id: int = 0) -> None:
 
     @inheritable_thread_target
     def _one(tier: str) -> None:
-        write_tombstones(spark, f"{state_dir}/{tier}", ids)
+        store.forget(spark, f"{state_dir}/{tier}", ids)
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         for _ in pool.map(_one, _DEL_TIERS):
@@ -613,56 +567,24 @@ def ingest_forget(spark, state_dir, doc_ids, request_id: int = 0) -> None:
 
 def compact_ingest_state(spark, state_dir) -> dict:
     """Fold every tier's generations into one and PHYSICALLY drop
-    tombstoned rows (streaming.dedup_index.compact_index per tier —
-    the deleted text is GONE from the post-compaction parquet bytes,
-    pytest-pinned), then fold the counter generations into one
-    ``gen=seed`` (summing is associative; negations disappear into
-    the fold). Run between folds/forgets, never concurrently with
-    one. Returns {tier: (files_before, files_after)}."""
-    import glob
-    import shutil
-
+    tombstoned rows (:func:`store.compact` per tier — the deleted text
+    is GONE from the post-compaction parquet bytes, pytest-pinned),
+    then fold the counter generations into one ``gen=seed`` (summing
+    is associative; negations disappear into the fold). Run between
+    folds/forgets, never concurrently with one. Returns {tier:
+    (files_before, files_after)}."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
     # tiers compact in parallel (guide §2.6): each tier's
-    # read→anti-join→rewrite→dir-swap touches ONLY its own directory
-    # and is a small job that would otherwise leave the cluster idle
+    # read→anti-join→rewrite→swap touches ONLY its own directory and
+    # is a small job that would otherwise leave the cluster idle
     # serially ×7. Exceptions propagate from pool.map — a failed tier
     # aborts the compaction exactly as the sequential loop did.
     @inheritable_thread_target
     def _one(tier: str) -> tuple[str, tuple]:
-        tdir = f"{state_dir}/{tier}"
-        schema_path = os.path.join(tdir, "_schema.json")
-        schema_raw = None
-        if os.path.exists(schema_path):
-            with open(schema_path) as fh:
-                schema_raw = fh.read()
-        # data files only: _tombstones/ also holds parquet, and a
-        # tier whose sole parquet is a tombstone file must still be
-        # skipped (compact_index would fail schema inference on the
-        # underscore-ignored data scan)
-        if glob.glob(os.path.join(tdir, "pb=*", "**", "*.parquet"), recursive=True):
-            out = compact_index(
-                spark,
-                tdir,
-                id_col="doc_id",
-                part_col="pb",
-                n_parts=ING_PB,
-            )
-        else:
-            # legitimately-empty tier (zero eval-fated docs): nothing
-            # to fold or drop
-            out = (0, 0)
-        # the compaction dir-swap replaced the root — restore the
-        # schema sidecar so post-compaction reads survive a tier
-        # whose every row was dropped
-        if schema_raw is not None:
-            os.makedirs(tdir, exist_ok=True)
-            with open(os.path.join(tdir, "_schema.json"), "w") as fh:
-                fh.write(schema_raw)
-        return tier, out
+        return tier, store.compact(spark, f"{state_dir}/{tier}", n_buckets=ING_PB)
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         stats = dict(pool.map(_one, _DEL_TIERS))
@@ -677,10 +599,7 @@ def compact_ingest_state(spark, state_dir) -> dict:
     )
     staged = cdir + ".compacting"
     folded.coalesce(1).write.mode("overwrite").parquet(f"{staged}/gen=seed")
-    old = cdir + ".precompact"
-    os.rename(cdir, old)
-    os.rename(staged, cdir)
-    shutil.rmtree(old)
+    store.swap(spark, cdir, staged)
     return stats
 
 

@@ -18,12 +18,12 @@ The 100 TB layout, shared with the dedup index:
   an ANN probe reads ONLY its probed cells' partitions (the
   PartitionFilters pruning is plan-pinned by
   tests/test_streaming.py::TestIvfpqFold).
-- **Idempotent**: codes are written with dynamic partition overwrite
-  keyed by ``src_batch`` — a replayed microbatch overwrites its own
+- **Idempotent**: codes are ``src_batch`` generations with dynamic
+  partition overwrite — a replayed microbatch overwrites its own
   generation instead of appending twice (pytest'd).
-- Compaction/tombstones generalize identically (the dedup_index
-  machinery is the reference implementation; cells here play the pb
-  role with natural rather than hashed keys).
+- The codes index is a generational store (streaming/store.py):
+  tombstones, compaction and the swap are the store's, with cells
+  playing the bucket role on natural rather than hashed keys.
 
 Under ``trigger(availableNow=True)`` with the whole delta in one
 batch the accumulated (vec_id, cell, q_err) relation equals the
@@ -33,23 +33,27 @@ row shares its DuckDB oracle verbatim.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chiv_spark.operators import similarity
-from chiv_spark.streaming.dedup_index import SEED_BATCH
+from chiv_spark.streaming import store
+from chiv_spark.streaming.store import SEED_BATCH
 
 OUT_COLS = ["vec_id", "cell", "q_err"]
 OUT_SCHEMA = "vec_id bigint, cell bigint, q_err bigint"
 
 
+def _code_cols(codes: DataFrame) -> DataFrame:
+    return codes.select(
+        "vec_id", "sub", "code", "qerr", F.col("cell").cast("long").alias("cell")
+    )
+
+
 def write_codes_generation(codes: DataFrame, codes_dir: str, batch_id: int) -> None:
     """Persist one generation of PER-SUB code rows (vec_id, sub, code,
-    qerr) under (cell, src_batch) directory partitions with dynamic
-    overwrite — the replay-idempotency contract of
-    dedup_index.write_index_generation on the ANN layout.
+    qerr) under (cell, src_batch) directory partitions
+    (:func:`store.write_gen`, one file per cell dir).
 
     Per-sub rows (not the per-vector q_err aggregate the fold
     previously stored — r11 ADVICE): the ADC probe joins on
@@ -57,21 +61,7 @@ def write_codes_generation(codes: DataFrame, codes_dir: str, batch_id: int) -> N
     bytes per vector. ivfpq_search_index over read_codes_pruned runs
     directly against this layout; per-vector aggregates are derived
     at read time."""
-    (
-        codes.select(
-            "vec_id", "sub", "code", "qerr", F.col("cell").cast("long").alias("cell")
-        )
-        .withColumn("src_batch", F.lit(int(batch_id)))
-        # one file per (cell, src_batch) dir instead of one sliver per
-        # upstream task per dir (guide §6 — see the suffix tier's
-        # measured tiny-file cost); the pruned probe scan then opens
-        # exactly one file per probed cell
-        .repartition(F.col("cell"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell", "src_batch")
-        .parquet(codes_dir)
-    )
+    store.write_gen(_code_cols(codes), codes_dir, batch_id, "cell")
 
 
 def agg_code_errors(rel: DataFrame) -> DataFrame:
@@ -122,27 +112,14 @@ def read_codes_pruned(
     an ANN query reads from the grown index. Tombstoned (deleted)
     vectors are anti-joined out immediately, before compaction
     physically drops them — the dedup index's deletion contract."""
-    from chiv_spark.streaming.dedup_index import (
-        anti_join_tombstones,
-        read_tombstones,
-    )
-
-    rel = spark.read.parquet(codes_dir).filter(
-        F.col("cell").isin([int(c) for c in cells])
-    )
-    tomb = read_tombstones(spark, codes_dir)
-    if tomb is not None:
-        rel = anti_join_tombstones(rel, tomb, "vec_id")
-    return rel
+    return store.read(spark, codes_dir, cells, id_col="vec_id", bucket="cell")
 
 
 def delete_vectors(spark: SparkSession, codes_dir: str, vec_ids) -> None:
     """GDPR-style vector deletion against the codes index: tombstoned
     ids stop appearing in every read_codes_pruned scan immediately and
     their code rows are physically dropped at compact_codes."""
-    from chiv_spark.streaming.dedup_index import write_tombstones
-
-    write_tombstones(spark, codes_dir, vec_ids, id_col="vec_id")
+    store.forget(spark, codes_dir, vec_ids, id_col="vec_id")
 
 
 def compact_codes(
@@ -152,18 +129,11 @@ def compact_codes(
     n_cells: int = 8,
 ) -> tuple[int, int]:
     """Fold the per-batch code generations into one file per cell and
-    apply pending deletions — the dedup index's compaction lifecycle
-    (streaming/dedup_index.py compact_index) on the (cell, src_batch)
-    layout."""
-    from chiv_spark.streaming.dedup_index import compact_index
-
-    return compact_index(
-        spark,
-        codes_dir,
-        committed_through=committed_through,
-        id_col="vec_id",
-        part_col="cell",
-        n_parts=n_cells,
+    apply pending deletions (:func:`store.compact` on the (cell,
+    src_batch) layout)."""
+    return store.compact(
+        spark, codes_dir, committed_through, id_col="vec_id", bucket="cell",
+        n_buckets=n_cells,
     )
 
 
@@ -176,37 +146,28 @@ def reencode_cells(
 ) -> None:
     """Rewrite ONLY the given cells' partitions with re-encoded code
     rows, leaving every other cell's files untouched (byte-identical
-    — the partition-scoped maintenance contract, pytest-pinned). The
-    per-cell directory swap is the local-FS stand-in for a
-    transactional format's partition-level rewrite commit, the
-    compact_index precedent. The rewritten cells collapse to a single
-    ``batch_id`` generation (default SEED_BATCH: maintenance
-    re-encodes a cell's FULL membership, so its per-batch history is
-    spent the same way compaction spends it)."""
-    import os
-    import shutil
-
+    — the partition-scoped maintenance contract, pytest-pinned). Each
+    rewritten cell dir goes in through :func:`store.swap`, the
+    partition-level form of compaction's commit. The rewritten cells
+    collapse to a single ``batch_id`` generation (default SEED_BATCH:
+    maintenance re-encodes a cell's FULL membership, so its per-batch
+    history is spent the same way compaction spends it)."""
     root = codes_dir.rstrip("/")
     staged = root + ".reencoding"
-    (
-        codes_new.filter(F.col("cell").isin([int(c) for c in cells]))
-        .select(
-            "vec_id", "sub", "code", "qerr", F.col("cell").cast("long").alias("cell")
-        )
-        .withColumn("src_batch", F.lit(int(batch_id)))
-        .repartition(F.col("cell"))  # one file per rewritten cell dir
-        .write.mode("overwrite")
-        .partitionBy("cell", "src_batch")
-        .parquet(staged)
+    store.delete(spark, staged)  # a leftover of an interrupted run
+    store.write_gen(
+        _code_cols(codes_new.filter(F.col("cell").isin([int(c) for c in cells]))),
+        staged,
+        batch_id,
+        "cell",
     )
     for c in cells:
-        old_dir = os.path.join(root, f"cell={int(c)}")
-        new_dir = os.path.join(staged, f"cell={int(c)}")
-        if os.path.isdir(old_dir):
-            shutil.rmtree(old_dir)
-        if os.path.isdir(new_dir):
-            os.rename(new_dir, old_dir)
-    shutil.rmtree(staged)
+        live, new = f"{root}/cell={int(c)}", f"{staged}/cell={int(c)}"
+        if store.exists(spark, new):
+            store.swap(spark, live, new)
+        else:  # the retrained centroids moved every member elsewhere
+            store.delete(spark, live)
+    store.delete(spark, staged)
 
 
 def maintain_codes(
@@ -312,22 +273,10 @@ def ivfpq_fold_stream(
     )
     q.awaitTermination()
     # explicit missing-sink check (not a bare except): an unreadable
-    # sink must raise, never silently report an empty index; remote
-    # URI sinks resolve through the Hadoop FS API (r12 ADVICE)
-    from chiv_spark.streaming.dedup_index import _dir_exists
-
-    if not _dir_exists(spark, codes_dir):
+    # sink must raise, never silently report an empty index
+    if not store.exists(spark, codes_dir):
         return spark.createDataFrame([], OUT_SCHEMA)
     # pending deletions apply to THIS read too, not only to
     # read_codes_pruned — a caller that ran delete_vectors mid-stream
     # must never get tombstoned vectors back (r10 ADVICE)
-    from chiv_spark.streaming.dedup_index import (
-        anti_join_tombstones,
-        read_tombstones,
-    )
-
-    rel = spark.read.parquet(codes_dir)
-    tomb = read_tombstones(spark, codes_dir)
-    if tomb is not None:
-        rel = anti_join_tombstones(rel, tomb, "vec_id")
-    return agg_code_errors(rel)
+    return agg_code_errors(store.read(spark, codes_dir, id_col="vec_id"))

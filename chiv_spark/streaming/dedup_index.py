@@ -26,25 +26,27 @@ JVM-side DataFrame API — no Python row UDFs; the only collect is the
 bounded touched-bucket list (≤ P_BUCKETS values, the cdc.py
 precedent).
 
-The 100 TB layout, made real (r8 verdict task 2 — previously asserted
-in prose only):
+The 100 TB layout is the generational store's (streaming/store.py),
+which owns the directories, the schema sidecar, tombstones,
+compaction and the swap; this module keeps the band-index specifics:
 
-- **Bucketed**: index rows are written under ``pb = pmod(key,
-  P_BUCKETS)`` directory partitions, so each microbatch's band join
-  reads ONLY the partitions its delta actually touches — the pruned
-  scan is plan-pinned by tests/test_streaming.py::TestIndexLayout
-  (PartitionFilters on pb), not asserted in prose.
+- **Bucketed**: index rows live under ``pb = pmod(key, P_BUCKETS)``
+  directory partitions, so each microbatch's band join reads ONLY
+  the partitions its delta touches — the pruned scan is plan-pinned
+  by tests/test_streaming.py::TestIndexLayout (PartitionFilters on
+  pb), not asserted in prose.
 - **Idempotent** (the foreachBatch exactly-once caveat): pairs and
-  index generations are written with dynamic partition overwrite
-  keyed by ``src_batch`` — a replayed microbatch OVERWRITES its own
-  partitions instead of appending twice — and each batch's index read
-  EXCLUDES its own ``src_batch`` so a replay that already folded its
-  signatures does not self-join against them.
+  index generations are ``src_batch`` generations with dynamic
+  partition overwrite — a replayed microbatch OVERWRITES its own
+  partitions instead of appending twice — and each batch's index
+  read EXCLUDES its own ``src_batch`` so a replay that already folded
+  its signatures does not self-join against them.
 - **Compactable**: every batch appends one small generation per
   touched bucket; :func:`compact_index` folds all generations into
-  one file per bucket (pairs unchanged, file count drops — pytest'd).
-  The dir-swap is the local-FS stand-in for what a transactional
-  table format (Iceberg/Delta) does natively on object stores.
+  one file per bucket (pairs unchanged, file count drops — pytest'd)
+  through ``store.compact``, whose swap runs on the root's Hadoop
+  FileSystem, so local, ``file://`` and ``s3a://`` roots share it
+  (on ``s3a://`` the swap is not atomic; see ``store.swap``).
 
 Under ``trigger(availableNow=True)`` with the whole delta in one
 batch the result equals the corresponding batch query's relation,
@@ -60,15 +62,18 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chiv_spark.operators import dedup, similarity
+from chiv_spark.streaming import store
+from chiv_spark.streaming.store import (  # noqa: F401 — the index's public names
+    SEED_BATCH,
+    _tombstone_dir,
+    anti_join_tombstones,
+    read_tombstones,
+)
 
 #: directory-partition fan-out of the index on pmod(band key, P).
 #: 16 here (tests read partition listings); thousands at 100 TB —
 #: the knob trades listing cost against pruning granularity.
 P_BUCKETS = 16
-
-#: src_batch generation of the pre-stream base index (and of every
-#: row after compaction)
-SEED_BATCH = -1
 
 #: the (doc_a, doc_b, est_jaccard) text sink columns
 PAIR_COLS = ["doc_a", "doc_b", "est_jaccard"]
@@ -83,37 +88,6 @@ def _pb(key_col: str) -> Column:
     return F.pmod(F.col(key_col), F.lit(P_BUCKETS)).cast("int")
 
 
-def _tombstone_dir(index_dir: str) -> str:
-    import os
-
-    # the leading underscore makes the directory INVISIBLE to Spark's
-    # partition discovery (same convention as _SUCCESS/_metadata), so
-    # tombstones can live inside the index root without polluting the
-    # data scan
-    return os.path.join(index_dir.rstrip("/"), "_tombstones")
-
-
-def _dir_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check that works for BOTH local paths and remote
-    filesystem URIs (hdfs://, s3a://). r12 ADVICE: the previous bare
-    ``os.path.isdir`` is always False for a '://' URI, which silently
-    scoped a GDPR-style delete to the seed generation (write path) or
-    dropped the pending deletion set entirely (read path) — the exact
-    fail-open the surrounding comments forbid. Remote roots resolve
-    through the Hadoop FileSystem API on the driver's JVM gateway —
-    the same code path Spark's own readers use — so a misconfigured
-    scheme RAISES instead of failing open."""
-    if "://" not in path:
-        import os
-
-        return os.path.isdir(path)
-    jvm = spark._jvm
-    jsc = spark._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
 def write_tombstones(
     spark: SparkSession,
     index_dir: str,
@@ -122,118 +96,20 @@ def write_tombstones(
     thru: int | None = None,
 ) -> None:
     """Record source-doc deletion requests (GDPR-style forget) against
-    the index: a tombstoned id is excluded from every subsequent
-    read_index_pruned scan immediately, and its signature rows are
-    physically dropped at the next compact_index. ``doc_ids`` is a
-    one-column DataFrame or an iterable of ints. Append-only — a
-    tombstone file is tiny and consumed/rewritten by compaction.
-
-    Tombstones are GENERATION-SCOPED (the r10 ADVICE re-ingest fix):
-    each carries a half-open ``(frm, thru]`` src_batch range and
-    suppresses only index rows whose generation falls inside it.
-    ``thru`` defaults to the index's current max src_batch (what the
-    delete can see at request time — a directory listing in a
-    partitioned layout; pass it explicitly to skip the read), so rows
-    legitimately RE-INGESTED for the same id after the delete land in
-    a later generation and are never suppressed or dropped."""
-    rel = (
-        doc_ids
-        if isinstance(doc_ids, DataFrame)
-        else spark.createDataFrame([(int(d),) for d in doc_ids], f"{id_col} bigint")
-    )
-    if thru is None:
-        # missing/empty index -> the delete can only see the seed
-        # generation; ANY OTHER read failure must RAISE (r11 ADVICE: a
-        # swallowed transient IO error would silently scope a
-        # GDPR-style delete to (-2,-1] and leave the id visible in
-        # every streamed generation — the deletion primitive must
-        # never fail open)
-        if not _dir_exists(spark, index_dir):
-            thru_row = None
-        else:
-            from pyspark.errors import AnalysisException
-
-            try:
-                thru_row = (
-                    spark.read.parquet(index_dir)
-                    .agg(F.max("src_batch"))
-                    .collect()[0][0]
-                )
-            except AnalysisException:
-                # dir exists but holds no readable parquet yet (index
-                # root created, first generation not committed) — the
-                # same "nothing visible" state as a missing dir
-                thru_row = None
-        thru = int(thru_row) if thru_row is not None else SEED_BATCH
-    (
-        rel.selectExpr(f"CAST({id_col} AS BIGINT) AS doc_id")
-        .withColumn("frm", F.lit(int(SEED_BATCH - 1)).cast("long"))
-        .withColumn("thru", F.lit(int(thru)).cast("long"))
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(_tombstone_dir(index_dir))
-    )
-
-
-def read_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    """The pending (not-yet-compacted) deletion set — one row per
-    (doc_id, frm, thru) scope — or None. Existence resolves through
-    :func:`_dir_exists`, so a remote index root never silently reads
-    as empty (r12 ADVICE)."""
-    d = _tombstone_dir(index_dir)
-    if not _dir_exists(spark, d):
-        return None
-    rel = spark.read.parquet(d)
-    # legacy (pre-generation-scoped) tombstone files carry doc_id only
-    # (r11 ADVICE: selecting frm/thru would raise on such an index and
-    # break every read until a manual migration) — default them to the
-    # widest scope, which is exactly the old semantics: suppress the
-    # id in every generation
-    if "frm" not in rel.columns:
-        rel = rel.withColumn("frm", F.lit(int(SEED_BATCH - 1)).cast("long"))
-    if "thru" not in rel.columns:
-        rel = rel.withColumn("thru", F.lit((1 << 62)).cast("long"))
-    return rel.select("doc_id", "frm", "thru").distinct()
-
-
-def anti_join_tombstones(rel: DataFrame, tomb: DataFrame, id_col: str) -> DataFrame:
-    """Drop rows of ``rel`` (which must carry ``src_batch``) whose id
-    is tombstoned AND whose generation falls inside the tombstone's
-    ``(frm, thru]`` scope. Broadcast anti-join: deletion requests are
-    tiny relative to the corpus by nature."""
-    t = tomb.select(
-        F.col("doc_id").alias("__ts_id"),
-        F.col("frm").alias("__ts_frm"),
-        F.col("thru").alias("__ts_thru"),
-    )
-    cond = (
-        (rel[id_col] == t["__ts_id"])
-        & (rel["src_batch"] > t["__ts_frm"])
-        & (rel["src_batch"] <= t["__ts_thru"])
-    )
-    return rel.join(F.broadcast(t), cond, "left_anti")
+    the index: a tombstoned id leaves every later read_index_pruned
+    scan at once, and compact_index physically drops its rows.
+    Generation-scoped, with ``thru`` defaulting to the index's newest
+    generation (:func:`store.forget`)."""
+    store.forget(spark, index_dir, doc_ids, id_col=id_col, thru=thru)
 
 
 def write_index_generation(
     index_rel: DataFrame, key_col: str, index_dir: str, batch_id: int
 ) -> None:
-    """Write one index generation under (pb, src_batch) partitions
-    with DYNAMIC partition overwrite: re-writing the same batch_id
-    replaces its own partitions and touches nothing else — the
-    replay-idempotency contract."""
-    (
-        index_rel.withColumn("pb", _pb(key_col))
-        .withColumn("src_batch", F.lit(int(batch_id)))
-        # one file per (pb, src_batch) dir instead of one sliver per
-        # upstream task per dir (guide §6 — the suffix tier measured
-        # ~1,000 tiny files per generation without this; reads pay the
-        # file count again on every pruned scan)
-        .repartition(F.col("pb"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pb", "src_batch")
-        .parquet(index_dir)
-    )
+    """Write one index generation under (pb, src_batch) partitions,
+    pb = pmod(key_col, P_BUCKETS) (:func:`store.write_gen`: replaying
+    a batch_id replaces its own partitions)."""
+    store.write_gen(index_rel.withColumn("pb", _pb(key_col)), index_dir, batch_id, "pb")
 
 
 def read_index_pruned(
@@ -244,27 +120,16 @@ def read_index_pruned(
     id_col: str = "doc_id",
     schema: str | None = None,
 ) -> DataFrame:
-    """The per-batch index relation: only the directory partitions the
-    arriving delta actually touches (partition-pruned scan — the scan
-    carries PartitionFilters on pb, plan-pinned in tests), minus the
-    batch's own generation so a replayed batch never joins against
-    the signatures it already folded in, minus any tombstoned ids
-    whose generation falls inside the tombstone's scope (pending
-    deletions take effect at read time, before compaction physically
-    drops them; rows re-ingested AFTER the delete sit past the scope
-    and stay visible). Pass ``schema`` when the index can be
-    legitimately EMPTY (every row tombstoned then compacted away — a
-    file-less directory schema inference rejects)."""
-    reader = spark.read.schema(schema) if schema else spark.read
-    idx = reader.parquet(index_dir).filter(
-        F.col("pb").isin([int(x) for x in touched_pbs])
+    """The per-batch index relation: only the pb partitions the
+    arriving delta touches (PartitionFilters on pb, plan-pinned in
+    tests), minus the batch's own generation so a replayed batch never
+    joins against the signatures it already folded in, minus pending
+    tombstones (:func:`store.read`). ``schema`` overrides the store's
+    schema sidecar."""
+    return store.read(
+        spark, index_dir, touched_pbs, exclude_batch, id_col=id_col, bucket="pb",
+        schema=schema,
     )
-    if exclude_batch is not None:
-        idx = idx.filter(F.col("src_batch") != int(exclude_batch))
-    tomb = read_tombstones(spark, index_dir)
-    if tomb is not None:
-        idx = anti_join_tombstones(idx, tomb, id_col)
-    return idx
 
 
 def compact_index(
@@ -275,96 +140,17 @@ def compact_index(
     part_col: str = "pb",
     n_parts: int = P_BUCKETS,
 ) -> tuple[int, int]:
-    """Fold the per-batch generation files into ONE file per pb
-    bucket and physically drop tombstoned ids. Run between stream
-    restarts: a steady ingest appends one small file per touched
-    bucket per batch, and object-store listing/open cost eventually
-    dominates the pruned join. Returns (files_before, files_after).
-
-    ``committed_through`` governs the replay guard (the
-    exclude_batch filter in read_index_pruned keys on src_batch):
-
-    - an int: only generations with ``src_batch <= committed_through``
-      collapse to SEED_BATCH; newer generations keep their src_batch
-      so a batch that folded its signatures but whose checkpoint
-      commit hadn't landed when the crash hit can still replay
-      without self-joining its own signatures. This is the
-      always-safe mode — pass the last batch id the checkpoint
-      shows committed.
-    - None (default): ALL generations collapse. Requires a
-      cleanly-committed checkpoint (no in-flight batch) — the
-      documented between-stream-restarts window. Even if violated,
-      the id-inequality guard in the vs-index joins
-      (dedup.incremental_lsh_pairs / similarity.incremental_neardup_
-      pairs) keeps a replayed batch from emitting self-pairs; the
-      residual effect is duplicate cross-pair rows, not corruption.
-
-    Pending tombstones are applied (rows inside their (frm, thru]
-    generation scope dropped — BEFORE the collapse relabels
-    generations, so a re-ingested id's newer rows are never caught by
-    an older tombstone even once their batch collapses to SEED) and
-    then consumed: cleared in full-collapse mode; in partial mode
-    each tombstone is REWRITTEN with ``frm = max(frm,
-    committed_through)`` — its already-compacted range is spent, but
-    a replayed uncommitted batch in (committed_through, thru] would
-    re-fold its generation — including the tombstoned id's rows —
-    after this compaction, and only the surviving scoped tombstone
-    keeps reads guarded until the next full collapse. A tombstone
-    whose scope empties (frm >= thru) is dropped.
-
-    The stage-swap via directory rename is the local-FS stand-in for
-    a transactional table format's rewrite commit; the Spark plan is
-    the real thing (one shuffle on pb, one writer task per bucket)."""
-    import glob
-    import os
-    import shutil
-
-    def count_files(d: str) -> int:
-        return len(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
-
-    root = index_dir.rstrip("/")
-    before = count_files(root)
-    rows = spark.read.parquet(root)
-    # apply deletions on the ORIGINAL generation labels first: the
-    # scope test must see the src_batch each row was folded under,
-    # not the post-collapse SEED label
-    tomb = read_tombstones(spark, root)
-    if tomb is not None:
-        rows = anti_join_tombstones(rows, tomb, id_col)
-    if committed_through is None:
-        rows = rows.withColumn("src_batch", F.lit(SEED_BATCH))
-    else:
-        rows = rows.withColumn(
-            "src_batch",
-            F.when(
-                F.col("src_batch") <= int(committed_through), F.lit(SEED_BATCH)
-            ).otherwise(F.col("src_batch")),
-        )
-    # each bucket lands wholly in one task -> one output file per
-    # (part_col, src_batch) directory; full collapse = one file per
-    # bucket. part_col/n_parts default to the dedup index's pb layout;
-    # the ANN codes index passes ("cell", n_cells) — same lifecycle,
-    # different bucket key.
-    compacted = rows.repartition(n_parts, part_col)
-    staged = root + ".compacting"
-    compacted.write.mode("overwrite").partitionBy(part_col, "src_batch").parquet(staged)
-    if tomb is not None and committed_through is not None:
-        # carry unconsumed tombstones into the new root, with their
-        # already-compacted range spent (see docstring); fully-spent
-        # tombstones drop out here
-        carried = (
-            tomb.withColumn(
-                "frm", F.greatest("frm", F.lit(int(committed_through)).cast("long"))
-            )
-            .filter(F.col("frm") < F.col("thru"))
-        )
-        if carried.limit(1).count() > 0:
-            carried.coalesce(1).write.mode("overwrite").parquet(_tombstone_dir(staged))
-    old = root + ".precompact"
-    os.rename(root, old)
-    os.rename(staged, root)
-    shutil.rmtree(old)
-    return before, count_files(root)
+    """Fold the per-batch generation files into one file per
+    ``part_col`` bucket and physically drop tombstoned ids; returns
+    (files_before, files_after). Run between stream restarts: a steady
+    ingest appends one small file per touched bucket per batch, and
+    listing/open cost eventually dominates the pruned join. See
+    :func:`store.compact` for ``committed_through`` and the tombstone
+    rules, and :func:`store.swap` for the commit."""
+    return store.compact(
+        spark, index_dir, committed_through, id_col=id_col, bucket=part_col,
+        n_buckets=n_parts,
+    )
 
 
 def index_fold_stream(
@@ -433,14 +219,7 @@ def index_fold_stream(
         index = read_index_pruned(
             spark, index_dir, touched, exclude_batch=batch_id, id_col=id_col
         )
-        pairs = pairs_builder(dsig, index)
-        (
-            pairs.withColumn("src_batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("src_batch")
-            .parquet(out_dir)
-        )
+        store.write_gen(pairs_builder(dsig, index), out_dir, batch_id)
         if touched:
             # AFTER the pairs action: fold this batch's signatures into
             # the index so later batches dedup against them (folding
@@ -460,7 +239,7 @@ def index_fold_stream(
     # corrupt sink must RAISE, never silently report "no duplicates"
     # (infrastructure failure masquerading as a clean result); remote
     # URI sinks resolve through the Hadoop FS API (r12 ADVICE)
-    if not _dir_exists(spark, out_dir):
+    if not store.exists(spark, out_dir):
         return spark.createDataFrame([], pair_schema)
     # explicit schema: a batch with zero output rows leaves a file-less
     # sink dir that schema inference rejects — legitimately empty, not
@@ -563,22 +342,14 @@ def bloom_membership_stream(
     out_dir = f"{work}/hits"
     ckpt_dir = f"{work}/ckpt"
 
-    (
-        dedup.bloom_bitmap(prior_texts, m_bits, k)
-        .withColumn("src_batch", F.lit(int(SEED_BATCH)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("src_batch")
-        .parquet(bloom_dir)
-    )
+    store.write_gen(dedup.bloom_bitmap(prior_texts, m_bits, k), bloom_dir, SEED_BATCH)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         delta = (
             batch_df if delta_predicate is None else batch_df.filter(delta_predicate)
         )
         bm = (
-            spark.read.parquet(bloom_dir)
-            .filter(F.col("src_batch") != int(batch_id))
+            store.read(spark, bloom_dir, exclude_batch=batch_id)
             .groupBy("word_idx")
             .agg(F.expr("bit_or(bits)").alias("bits"))
         )
@@ -593,23 +364,10 @@ def bloom_membership_stream(
                     F.coalesce("is_prior", F.lit(False)).alias("exact_dup"),
                 )
             )
-        (
-            res.withColumn("src_batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("src_batch")
-            .parquet(out_dir)
-        )
+        store.write_gen(res, out_dir, batch_id)
         # fold AFTER the probe action: within-batch self-hits stay
         # absent (batch semantics), later batches see these bits
-        (
-            dedup.bloom_bitmap(delta, m_bits, k)
-            .withColumn("src_batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("src_batch")
-            .parquet(bloom_dir)
-        )
+        store.write_gen(dedup.bloom_bitmap(delta, m_bits, k), bloom_dir, batch_id)
 
     q = (
         arrivals_stream.writeStream.foreachBatch(_apply)
@@ -618,7 +376,7 @@ def bloom_membership_stream(
         .start()
     )
     q.awaitTermination()
-    if not _dir_exists(spark, out_dir):
+    if not store.exists(spark, out_dir):
         return spark.createDataFrame(
             [], "doc_id bigint, bloom_hit boolean, exact_dup boolean"
         )
@@ -670,15 +428,10 @@ def heavy_hitters_stream(
         delta = (
             batch_df if delta_predicate is None else batch_df.filter(delta_predicate)
         )
-        (
-            delta.select("text")
-            .mapInPandas(summaries_fn, "w string")
-            .distinct()
-            .withColumn("src_batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("src_batch")
-            .parquet(cand_dir)
+        store.write_gen(
+            delta.select("text").mapInPandas(summaries_fn, "w string").distinct(),
+            cand_dir,
+            batch_id,
         )
 
     q = (
@@ -688,7 +441,7 @@ def heavy_hitters_stream(
         .start()
     )
     q.awaitTermination()
-    if not _dir_exists(spark, cand_dir):
+    if not store.exists(spark, cand_dir):
         return spark.createDataFrame([], "w string, freq bigint")
     cand = (
         spark.read.schema("w string, src_batch bigint")

@@ -23,12 +23,13 @@ This is a different streaming pattern from the index-fold dedup tiers
   arrival time.
 - **Bounded state.** The store holds counter rows, not documents —
   at most one row per (source, fingerprint) pair per generation, and
-  compaction (sum into SEED_BATCH, the dedup_index convention) keeps
+  compaction (sum into SEED_BATCH, the generational-store convention) keeps
   it at the distinct-pair count regardless of corpus size.
 
 Idempotency is the standard generational contract: each batch writes
-its counters under ``src_batch`` with dynamic partition overwrite, so
-a replayed batch replaces its own partition instead of double-counting
+its counters as one ``src_batch`` generation of a generational store
+(streaming/store.py ``write_gen``, dynamic partition overwrite), so a
+replayed batch replaces its own partition instead of double-counting
 — the exactly-once caveat of foreachBatch handled the same way the
 index tiers handle it.
 """
@@ -38,7 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chiv_spark.streaming.dedup_index import SEED_BATCH, _dir_exists
+from chiv_spark.streaming import store
+from chiv_spark.streaming.store import SEED_BATCH
 
 #: counter-store schema (src_batch is the partition column)
 COUNTS_SCHEMA = "source string, fingerprint bigint, n bigint, k bigint"
@@ -50,20 +52,6 @@ COUNTS_SCHEMA = "source string, fingerprint bigint, n bigint, k bigint"
 #: counters, which would have replaced that generation with the
 #: negation instead of subtracting.
 DELETE_BASE = -1_000_000
-
-
-def write_counts_generation(
-    counts: DataFrame, counts_dir: str, batch_id: int
-) -> None:
-    """One counter generation under src_batch partitions with dynamic
-    partition overwrite (replay replaces, never double-counts)."""
-    (
-        counts.withColumn("src_batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("src_batch")
-        .parquet(counts_dir)
-    )
 
 
 def read_counts(spark: SparkSession, counts_dir: str) -> DataFrame:
@@ -85,19 +73,12 @@ def read_counts(spark: SparkSession, counts_dir: str) -> DataFrame:
 def compact_counts(spark: SparkSession, counts_dir: str) -> None:
     """Fold every generation into one SEED_BATCH generation: the
     report is unchanged (summing is associative), the store shrinks
-    to one row per distinct (source, fingerprint) pair."""
-    folded = read_counts(spark, counts_dir)
+    to one row per distinct (source, fingerprint) pair, committed by
+    :func:`store.swap`."""
     staged = f"{counts_dir.rstrip('/')}__staged"
-    (
-        folded.withColumn("src_batch", F.lit(int(SEED_BATCH)))
-        .write.mode("overwrite")
-        .partitionBy("src_batch")
-        .parquet(staged)
-    )
-    import shutil
-
-    shutil.rmtree(counts_dir)
-    shutil.move(staged, counts_dir)
+    store.delete(spark, staged)  # a leftover of an interrupted run
+    store.write_gen(read_counts(spark, counts_dir), staged, SEED_BATCH)
+    store.swap(spark, counts_dir, staged)
 
 
 def domain_stats_stream(
@@ -119,9 +100,7 @@ def domain_stats_stream(
     ckpt_dir = f"{work}/ckpt"
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        write_counts_generation(
-            domain_counts(batch_df), counts_dir, batch_id
-        )
+        store.write_gen(domain_counts(batch_df), counts_dir, batch_id)
 
     q = (
         arrivals_stream.writeStream.foreachBatch(_apply)
@@ -130,7 +109,7 @@ def domain_stats_stream(
         .start()
     )
     q.awaitTermination()
-    if not _dir_exists(spark, counts_dir):
+    if not store.exists(spark, counts_dir):
         return spark.createDataFrame(
             [],
             "source string, n_docs bigint, n_keep bigint, n_dup bigint, "
@@ -206,4 +185,4 @@ def delete_docs_counts(deleted_docs: DataFrame, counts_dir: str, batch_id: int) 
         (-F.col("n")).alias("n"),
         (-F.col("k")).alias("k"),
     )
-    write_counts_generation(neg, counts_dir, DELETE_BASE - int(batch_id))
+    store.write_gen(neg, counts_dir, DELETE_BASE - int(batch_id))

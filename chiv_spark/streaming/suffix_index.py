@@ -21,12 +21,13 @@ the corpus table; here arrived generations persist next to the index
 (the resident base stays a static relation). Only twin docs' text is
 ever re-read.
 
-foreachBatch conventions are the dedup_index ones: dynamic partition
-overwrite keyed on src_batch for replay idempotence, each batch's
-index read excluding its own generation, bounded touched-bucket
-collect (≤ WINDOW_PB values). Under availableNow with the whole
-delta in one batch the result equals the batch query's relation, so
-the registry twins share their DuckDB oracle verbatim.
+Both stores are generational stores (streaming/store.py): dynamic
+partition overwrite keyed on src_batch for replay idempotence, each
+batch's index read excluding its own generation, tombstones and
+compaction shared; the touched-bucket collect is bounded (≤ WINDOW_PB
+values). Under availableNow with the whole delta in one batch the
+result equals the batch query's relation, so the registry twins
+share their DuckDB oracle verbatim.
 """
 
 from __future__ import annotations
@@ -39,15 +40,8 @@ from chiv_spark.operators.suffixes import (
     incremental_span_trim,
     window_index,
 )
-from chiv_spark.streaming.dedup_index import (
-    SEED_BATCH,
-    _dir_exists,
-    anti_join_tombstones,
-    compact_index,
-    read_index_pruned,
-    read_tombstones,
-    write_tombstones,
-)
+from chiv_spark.streaming import store
+from chiv_spark.streaming.store import SEED_BATCH
 
 OUT_COLS = ["doc_id", "n_tokens", "span_ge8", "trimmed_text", "keep"]
 OUT_SCHEMA = (
@@ -57,36 +51,33 @@ OUT_SCHEMA = (
 
 #: directory-partition fan-out of the DOC STORE on pmod(doc_id, P) —
 #: gives the store the same bucketed/compactable layout as the window
-#: index so one compaction lifecycle (compact_index) serves both
+#: index so one compaction lifecycle (store.compact) serves both
 DOC_PB = 16
 
-#: explicit read schemas: both stores can be legitimately EMPTY after
-#: a forget-everything compaction (a file-less dir schema inference
-#: rejects), and the GDPR lifecycle must survive that state
+#: the window index's read schema (pb and src_batch are partition
+#: columns); a store written by this module carries it as its sidecar
 WINIDX_SCHEMA = "doc_id bigint, wh bigint, cnt bigint, pb int, src_batch int"
-DOCS_SCHEMA = "doc_id bigint, text string, pb int, src_batch int"
-
-#: window-index dirs already verified non-legacy this process (the
-#: check costs a schema inference — one footer read — per store)
-_WINIDX_LAYOUT_OK: set = set()
 
 
-def _check_winidx_layout(spark: SparkSession, index_dir: str) -> None:
-    """Fail LOUDLY on a pre-r17 window-index layout (r17 advice): the
-    r17 format keyed windows by ``wh bigint`` (xxhash64) instead of
-    the joined window string ``w``. Reading an old store with the new
-    explicit schema would silently fill ``wh`` with nulls — index
-    joins then match nothing and incremental dedup silently misses
-    every resident duplicate. Detect the legacy column and raise with
-    re-seed instructions instead."""
-    if index_dir in _WINIDX_LAYOUT_OK:
-        return
-    try:
-        names = set(spark.read.parquet(index_dir).schema.names)
-    except Exception:  # noqa: BLE001 — empty/missing store: nothing to check
-        _WINIDX_LAYOUT_OK.add(index_dir)
-        return
-    if "w" in names and "wh" not in names:
+def _doc_pb():
+    return F.pmod(F.col("doc_id"), F.lit(DOC_PB)).cast("int")
+
+
+def _read_winidx(
+    spark: SparkSession,
+    index_dir: str,
+    buckets: list[int] | None = None,
+    exclude_batch: int | None = None,
+) -> DataFrame:
+    """The window index through the store, failing LOUDLY on a pre-r17
+    layout: that format keyed windows by the joined window string
+    ``w`` instead of ``wh bigint`` (xxhash64), and reading it as the
+    new layout fills ``wh`` with nulls, so index joins match nothing
+    and incremental dedup silently misses every resident duplicate.
+    Such a store has no schema sidecar, so its read infers the schema
+    and the legacy column shows."""
+    idx = store.read(spark, index_dir, buckets, exclude_batch, id_col="doc_id")
+    if "wh" not in idx.columns:
         raise ValueError(
             f"window index at {index_dir} uses the pre-r17 string-keyed "
             "layout (column 'w'); the engine now keys windows by xxhash64 "
@@ -94,36 +85,40 @@ def _check_winidx_layout(spark: SparkSession, index_dir: str) -> None:
             "fold) from the corpus — reading it as-is would silently "
             "nominate zero twins."
         )
-    _WINIDX_LAYOUT_OK.add(index_dir)
+    return idx
 
 
-def _doc_pb():
-    return F.pmod(F.col("doc_id"), F.lit(DOC_PB)).cast("int")
+def _check_before_seed(spark: SparkSession, index_dir: str) -> None:
+    # seeding into a PRE-EXISTING legacy store would dynamic-overwrite
+    # only the seed generation, leave string-keyed generations in place
+    # and stamp the new schema on them; a root with no data yet has no
+    # layout to check
+    from pyspark.errors import AnalysisException
+
+    if store.exists(spark, index_dir):
+        try:
+            _read_winidx(spark, index_dir)
+        except AnalysisException:
+            pass
 
 
 def read_doc_store(
     spark: SparkSession, docs_dir: str, exclude_batch: int | None = None
 ) -> DataFrame:
-    """The doc store's visible (doc_id, text) relation: all persisted
-    generations minus the reader's own (replay guard) minus any
-    tombstoned ids whose generation falls inside the tombstone's
-    scope — a GDPR-style forget takes effect at READ time, before
-    compaction physically drops the text (r13 verdict task 3: raw
-    document text is the most sensitive store the lifecycle guards)."""
-    rel = spark.read.schema(DOCS_SCHEMA).parquet(docs_dir)
-    if exclude_batch is not None:
-        rel = rel.filter(F.col("src_batch") != int(exclude_batch))
-    tomb = read_tombstones(spark, docs_dir)
-    if tomb is not None:
-        rel = anti_join_tombstones(rel, tomb, "doc_id")
-    return rel.select("doc_id", "text")
+    """The doc store's visible (doc_id, text) relation: a GDPR-style
+    forget takes effect at READ time, before compaction physically
+    drops the text (raw document text is the most sensitive store the
+    lifecycle guards)."""
+    return store.read(spark, docs_dir, exclude_batch=exclude_batch).select(
+        "doc_id", "text"
+    )
 
 
 def suffix_forget(spark: SparkSession, work_dir: str, doc_ids) -> None:
     """GDPR-style forget across BOTH of the suffix tier's persisted
     stores: the window index (the doc's 8-gram counts stop nominating
     it as a twin) and the doc store (its raw text is never re-read).
-    Generation-scoped tombstones (dedup_index.write_tombstones), so a
+    Generation-scoped tombstones (store.forget), so a
     re-ingest of the same id after the delete lands in a later
     generation and stays visible; compact_suffix_store physically
     drops the suppressed rows from both stores."""
@@ -133,8 +128,8 @@ def suffix_forget(spark: SparkSession, work_dir: str, doc_ids) -> None:
     # two independent tiny writes to disjoint dirs — overlap them
     # (guide §2.6); exceptions propagate through result()
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fa = pool.submit(write_tombstones, spark, f"{work}/winidx", doc_ids)
-        fb = pool.submit(write_tombstones, spark, f"{work}/docs", doc_ids)
+        fa = pool.submit(store.forget, spark, f"{work}/winidx", doc_ids)
+        fb = pool.submit(store.forget, spark, f"{work}/docs", doc_ids)
         fa.result()
         fb.result()
 
@@ -148,29 +143,23 @@ def seed_suffix_store(spark: SparkSession, docs: DataFrame, work_dir: str) -> No
     from concurrent.futures import ThreadPoolExecutor
 
     work = work_dir.rstrip("/")
-    # seeding into a PRE-EXISTING legacy store would dynamic-overwrite
-    # only the seed generation and leave string-keyed generations in
-    # place — check before writing (no-op for the usual fresh dir)
-    _check_winidx_layout(docs.sparkSession, f"{work}/winidx")
+    _check_before_seed(docs.sparkSession, f"{work}/winidx")
     # the two seed writes land in disjoint dirs — overlap them (guide
     # §2.6; the doc-store write back-fills the window aggregation's
     # tail); exceptions propagate through result()
     with ThreadPoolExecutor(max_workers=2) as pool:
         fa = pool.submit(
-            _write_gen, window_index(docs), f"{work}/winidx", SEED_BATCH, ["pb"]
+            store.write_gen, window_index(docs), f"{work}/winidx", SEED_BATCH, "pb"
         )
         fb = pool.submit(
-            _write_gen,
+            store.write_gen,
             docs.select("doc_id", "text").withColumn("pb", _doc_pb()),
             f"{work}/docs",
             SEED_BATCH,
-            ["pb"],
+            "pb",
         )
         fa.result()
         fb.result()
-    # this process just wrote the current layout: probes can skip the
-    # legacy-layout schema inference (a directory-discovery job)
-    _WINIDX_LAYOUT_OK.add(f"{work}/winidx")
 
 
 def probe_suffix_store(
@@ -200,10 +189,7 @@ def probe_suffix_store(
         )
         dwin.unpersist()
         return out
-    _check_winidx_layout(spark, f"{work}/winidx")
-    idx = read_index_pruned(
-        spark, f"{work}/winidx", touched, id_col="doc_id", schema=WINIDX_SCHEMA
-    )
+    idx = _read_winidx(spark, f"{work}/winidx", touched)
     resident = read_doc_store(spark, f"{work}/docs")
     out = incremental_span_trim(
         delta, dwin, idx, resident, threshold, scratch_dir=scratch_dir
@@ -220,35 +206,11 @@ def compact_suffix_store(
     dropped' is a privacy obligation, not just hygiene). Returns the
     (files_before, files_after) pair per store."""
     work = work_dir.rstrip("/")
-    widx = compact_index(
-        spark, f"{work}/winidx", committed_through, id_col="doc_id",
-        part_col="pb", n_parts=WINDOW_PB,
+    widx = store.compact(
+        spark, f"{work}/winidx", committed_through, n_buckets=WINDOW_PB
     )
-    docs = compact_index(
-        spark, f"{work}/docs", committed_through, id_col="doc_id",
-        part_col="pb", n_parts=DOC_PB,
-    )
+    docs = store.compact(spark, f"{work}/docs", committed_through, n_buckets=DOC_PB)
     return widx, docs
-
-
-def _write_gen(rel: DataFrame, out_dir: str, batch_id: int, parts: list[str]) -> None:
-    rel = rel.withColumn("src_batch", F.lit(int(batch_id)))
-    if parts:
-        # cluster rows by the directory-partition key before the write
-        # (guide §6 output sizing): without this every upstream task
-        # writes a sliver into every pb dir — measured at sf0.1, one
-        # window-index generation wrote 64 tasks x 16 dirs ≈ 1,000
-        # tiny files in 3.4 s vs 16 files in 0.65 s repartitioned, and
-        # every later pruned read pays the file-count again. One file
-        # per (pb, src_batch) dir; at 100 TB the bucket count is
-        # thousands, so the write still fans wide.
-        rel = rel.repartition(*[F.col(p) for p in parts])
-    (
-        rel.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*parts, "src_batch")
-        .parquet(out_dir)
-    )
 
 
 def incremental_exact_substr_stream(
@@ -269,11 +231,8 @@ def incremental_exact_substr_stream(
     out_dir = f"{work}/out"
     ckpt_dir = f"{work}/ckpt"
 
-    # a pre-existing work_dir may hold a pre-r17 string-keyed index;
-    # the seed's dynamic overwrite would leave its old generations in
-    # place — fail loudly before folding anything into it
-    _check_winidx_layout(spark, index_dir)
-    _write_gen(window_index(base_docs), index_dir, SEED_BATCH, ["pb"])
+    _check_before_seed(spark, index_dir)
+    store.write_gen(window_index(base_docs), index_dir, SEED_BATCH, "pb")
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         delta = (
@@ -285,11 +244,8 @@ def incremental_exact_substr_stream(
             # pruned + tombstone-aware reads (r13 verdict task 3):
             # a suffix_forget issued between batches takes effect on
             # the NEXT batch's index probe and twin-text read
-            idx = read_index_pruned(
-                spark, index_dir, touched, exclude_batch=batch_id,
-                id_col="doc_id", schema=WINIDX_SCHEMA,
-            )
-            if _dir_exists(spark, docs_dir):
+            idx = _read_winidx(spark, index_dir, touched, exclude_batch=batch_id)
+            if store.exists(spark, docs_dir):
                 arrived = read_doc_store(spark, docs_dir, exclude_batch=batch_id)
             else:
                 arrived = spark.createDataFrame([], "doc_id bigint, text string")
@@ -314,7 +270,7 @@ def incremental_exact_substr_stream(
                 F.col("text").alias("trimmed_text"),
                 F.lit(True).alias("keep"),
             )
-        _write_gen(out, out_dir, batch_id, [])
+        store.write_gen(out, out_dir, batch_id)
         if touched:
             # AFTER the output action: fold this batch's windows and
             # text in, so a replay's excluded-own-generation read and
@@ -325,13 +281,13 @@ def incremental_exact_substr_stream(
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=2) as pool:
-                fa = pool.submit(_write_gen, dwin, index_dir, batch_id, ["pb"])
+                fa = pool.submit(store.write_gen, dwin, index_dir, batch_id, "pb")
                 fb = pool.submit(
-                    _write_gen,
+                    store.write_gen,
                     delta.withColumn("pb", _doc_pb()),
                     docs_dir,
                     batch_id,
-                    ["pb"],
+                    "pb",
                 )
                 fa.result()
                 fb.result()
@@ -344,7 +300,7 @@ def incremental_exact_substr_stream(
         .start()
     )
     q.awaitTermination()
-    if not _dir_exists(spark, out_dir):
+    if not store.exists(spark, out_dir):
         return spark.createDataFrame([], OUT_SCHEMA)
     # explicit schema: a batch whose delta was EMPTY writes a file-less
     # sink directory (dynamic overwrite of zero rows), which schema

@@ -684,7 +684,6 @@ class TestLegacyWindowIndexGuard:
         import pytest
 
         from chiv_spark.streaming.suffix_index import (
-            _WINIDX_LAYOUT_OK,
             probe_suffix_store,
         )
 
@@ -698,9 +697,38 @@ class TestLegacyWindowIndexGuard:
             [(100, " ".join(f"t{i}" for i in range(12)))],
             "doc_id long, text string",
         )
-        _WINIDX_LAYOUT_OK.discard(f"{work}/winidx")
         with pytest.raises(ValueError, match="pre-r17|Re-seed"):
             probe_suffix_store(spark, delta, work, threshold=8)
+
+    def test_recreated_store_is_checked_again(self, spark, tmp_path):
+        """A window index deleted and re-created at the same path in
+        the same process is checked afresh: nothing remembers that an
+        earlier store at that path was sound."""
+        import shutil
+
+        import pytest
+
+        from chiv_spark.streaming.suffix_index import (
+            probe_suffix_store,
+            seed_suffix_store,
+        )
+
+        span = " ".join(f"t{i}" for i in range(12))
+        work = str(tmp_path / "store")
+        seed_suffix_store(
+            spark,
+            spark.createDataFrame([(1, f"lead {span} tail")], "doc_id long, text string"),
+            work,
+        )
+        delta = spark.createDataFrame([(100, span)], "doc_id long, text string")
+        assert probe_suffix_store(spark, delta, work, threshold=8).collect()
+        shutil.rmtree(f"{work}/winidx")
+        spark.createDataFrame(
+            [(1, " ".join(f"t{i}" for i in range(8)), 1, 2, -1)],
+            "doc_id long, w string, cnt long, pb int, src_batch int",
+        ).write.partitionBy("pb", "src_batch").parquet(f"{work}/winidx")
+        with pytest.raises(ValueError, match="pre-r17|Re-seed"):
+            probe_suffix_store(spark, delta, work, threshold=8).collect()
 
 
 class TestSuffixStoreDeletion:
