@@ -142,6 +142,16 @@ def _csv_partition_encoder(dtypes: list[T.DataType], placeholders: list[object])
 # two; tests/test_errors.py pins the stage names)
 _ROW_ERR = "chiv-format-row"
 
+# The single-object encode spread (see _stream_single_object): a
+# one-partition input whose size estimate exceeds _SPREAD_BYTES is
+# range-repartitioned into _SPREAD_PARTS partitions. Measured on sf0.1
+# lineitem, YAML, 4 cores: a 6k-row LIMIT (0.65 MB) ran 0.8-1.9 s
+# unspread vs 1.4-1.6 s spread, a 100k-row LIMIT (10.8 MB) 3.7-4.1 s
+# spread vs 4.3-5.6 s unspread; 100k rows over 1/2/4/8 parts ran
+# 5.2/3.6/4.6/7.5 s at 32 cores and 3.7/2.6/2.8/3.0 s at 8 (r18).
+_SPREAD_BYTES = 8 << 20
+_SPREAD_PARTS = 2
+
 
 def _json_partition_encoder(dtypes: list[T.DataType], columns: list[str], placeholders: list[object]):
     """Executor-side JSON row encoding for the single-object fast
@@ -480,8 +490,7 @@ class Archiver:
                 # ONE partition, so the Python row encode — the hot
                 # loop of this path — runs on a single core while the
                 # rest idle. When the input is single-partitioned and
-                # its size estimate clears
-                # ``spark.chiv.archive.spreadBytes`` (default 8 MiB),
+                # its size estimate clears ``_SPREAD_BYTES`` (8 MiB),
                 # range-repartition on a sequential row id: global
                 # order (and therefore the output bytes) is preserved
                 # — range partitions of a totally ordered unique key
@@ -492,15 +501,9 @@ class Archiver:
                 # input). The estimate is the input files' size capped
                 # by the plan's row bound × default row size
                 # (core/sizing.py), so a LIMIT is charged for the rows
-                # it can return, not the file it reads. Measured
-                # crossover (YAML, sf0.1 lineitem, 4 cores): a
-                # 6,000-row LIMIT (0.65 MB estimate) took 0.8-1.9 s in
-                # 1 job unspread against 1.4-1.6 s in 4 jobs spread;
-                # 100k rows (10.8 MB) took 3.7-4.1 s spread against
-                # 4.3-5.6 s unspread. The r18 sweep measured 100k rows
-                # with yaml off/2/4/8 parts = 5.2/3.6/4.6/7.5 s at 32
-                # cores and 3.7/2.6/2.8/3.0 at 8. Hence the SMALL fan-out
-                # (``spark.chiv.archive.spreadParts``, default 2):
+                # it can return, not the file it reads (measured
+                # crossover beside the constants). The SMALL fan-out
+                # (``_SPREAD_PARTS``, 2):
                 # toLocalIterator schedules one job per partition, two
                 # partitions give the driver sink one prefetched chunk
                 # to overlap with, and anything wider just queues jobs.
@@ -514,15 +517,7 @@ class Archiver:
                     # unknown size: keep the untouched one-partition
                     # path (the pre-spread behavior for odd inputs)
                     est = 0
-                gate = int(
-                    df.sparkSession.conf.get(
-                        "spark.chiv.archive.spreadBytes", str(8 << 20)
-                    )
-                )
-                if est > gate and df.rdd.getNumPartitions() == 1:
-                    n = int(
-                        df.sparkSession.conf.get("spark.chiv.archive.spreadParts", "2")
-                    )
+                if est > _SPREAD_BYTES and df.rdd.getNumPartitions() == 1:
                     # collision-free helper name: withColumn over an
                     # existing user column would silently REPLACE it
                     # and drop() would then erase the user's data from
@@ -532,7 +527,7 @@ class Archiver:
                         rid = "_" + rid
                     src = (
                         df.withColumn(rid, F.monotonically_increasing_id())
-                        .repartitionByRange(n, rid)
+                        .repartitionByRange(_SPREAD_PARTS, rid)
                         .sortWithinPartitions(rid)
                         .drop(rid)
                     )

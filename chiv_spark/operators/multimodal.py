@@ -16,10 +16,10 @@ absent from this container (WebP, progressive/subsampled JPEG,
 H.264-class video codecs) raise ``NotImplementedError`` or fall back
 to a clearly-marked deterministic fake.
 
-At scale: media payloads dominate partition size, so feature
-extraction repartitions by a size-aware key first and processes with
-Arrow-batched ``mapInPandas`` (one Python worker per partition, no
-per-row overhead).
+Feature extraction runs as Arrow-batched ``mapInPandas`` (one Python
+worker per partition, no per-row overhead) over the partitions it is
+given; only the two pure-Python LZW round trips (GIF frames, video
+samples) hash-spread their id lists over the cores first.
 """
 
 from __future__ import annotations
@@ -59,43 +59,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("feature", T.ArrayType(T.DoubleType())),
     ]
 )
-
-
-def _spread_ids(
-    ids: DataFrame, id_col: str = "media_id", heavy: bool = True
-) -> DataFrame:
-    """Hash-spread a SMALL codec input across the cores (r17, guide
-    §2.5 input skew / §1.2): every id row fans out into a full
-    encode+decode in the Python worker, but a bounded id list arrives
-    in O(1) parquet scan tasks — measured: all 60 video clips decoded
-    in ONE worker while 31 cores idled. When the optimizer's size
-    estimate is under ``spark.chiv.media.spreadBytes`` (default
-    256 MiB — the shuffle is id-sized, trivially cheap), ONE id-hash
-    exchange spreads rows across defaultParallelism workers. At
-    corpus scale the estimate exceeds the gate and the scan's own
-    many-task layout stands — the shape the module docstring always
-    promised ('repartitions by a size-aware key first').
-
-    ``heavy=False`` marks a CHEAP codec entry point (WAV synth,
-    dHash, JPEG/PNG feature passes: ~1 ms/row) where the exchange +
-    32-way task/Arrow fan-out costs more than the parallelism saves —
-    same-session on/off toggles at sf0.1 measured audio rows
-    +1.0-1.8 s and image rows +0.5 s WITH the spread, while the
-    pure-Python LZW paths (GIF frames, video samples, ~50-100 ms/row)
-    saved 2-3 s per row. Only the LZW decoders keep the spread."""
-    if not heavy:
-        return ids
-    from chiv_spark.core.sizing import relation_size_est
-
-    spark = ids.sparkSession
-    # input files' size, capped by the plan's row bound, instead of an
-    # optimizedPlan().stats() probe at every codec entry point of
-    # every rep
-    est = relation_size_est(ids)
-    gate = int(spark.conf.get("spark.chiv.media.spreadBytes", str(1 << 28)))
-    if est < gate:
-        ids = ids.repartition(spark.sparkContext.defaultParallelism, id_col)
-    return ids
 
 
 def decode_image(payload: bytes) -> tuple[int, int, int, bytes]:
@@ -319,7 +282,7 @@ def synth_audio(ids: DataFrame, rate: int = AUDIO_RATE) -> DataFrame:
                 {"media_id": pdf["media_id"], "payload": pdf["media_id"].map(synth)}
             )
 
-    return _spread_ids(ids.select("media_id"), heavy=False).mapInPandas(run, AUDIO_SCHEMA)
+    return ids.select("media_id").mapInPandas(run, AUDIO_SCHEMA)
 
 
 def audio_features(media: DataFrame) -> DataFrame:
@@ -429,7 +392,7 @@ def jpeg_roundtrip_features(ids: DataFrame, blocks: int = 4) -> DataFrame:
                 }
             )
 
-    return _spread_ids(ids.select("media_id"), heavy=False).mapInPandas(run, JPEG_FEATURE_SCHEMA)
+    return ids.select("media_id").mapInPandas(run, JPEG_FEATURE_SCHEMA)
 
 
 GIF_FRAME_SCHEMA = T.StructType(
@@ -494,7 +457,17 @@ def gif_frame_features(ids: DataFrame, n_frames: int = 4, w: int = 16, h: int = 
                 }
             )
 
-    return _spread_ids(ids.select("media_id")).mapInPandas(run, GIF_FRAME_SCHEMA)
+    # The pure-Python LZW round trip costs ~50-100 ms per id, but a
+    # bounded id list arrives in O(1) scan tasks (r17: all 60 clips
+    # decoded in ONE worker while 31 cores idled), so hash-spread the
+    # ids over the cores: 2-3 s saved per row at sf0.1. The cheap
+    # codecs (~1 ms/row) read their ids as scanned; there the
+    # exchange cost more than it saved (+0.5-1.8 s per row).
+    return (
+        ids.select("media_id")
+        .repartition(ids.sparkSession.sparkContext.defaultParallelism, "media_id")
+        .mapInPandas(run, GIF_FRAME_SCHEMA)
+    )
 
 
 VIDEO_SAMPLE_SCHEMA = T.StructType(
@@ -593,7 +566,12 @@ def video_frame_sample(
                 }
             )
 
-    return _spread_ids(ids.select("media_id")).mapInPandas(run, VIDEO_SAMPLE_SCHEMA)
+    # the same id spread as gif_frame_features' LZW round trip
+    return (
+        ids.select("media_id")
+        .repartition(ids.sparkSession.sparkContext.defaultParallelism, "media_id")
+        .mapInPandas(run, VIDEO_SAMPLE_SCHEMA)
+    )
 
 
 def png_resize_features(
@@ -651,7 +629,7 @@ def png_resize_features(
                 }
             )
 
-    return _spread_ids(ids.select("media_id"), heavy=False).mapInPandas(run, JPEG_FEATURE_SCHEMA)
+    return ids.select("media_id").mapInPandas(run, JPEG_FEATURE_SCHEMA)
 
 
 DHASH_SCHEMA = T.StructType(
@@ -754,7 +732,7 @@ def image_dhash(
                 }
             )
 
-    return _spread_ids(ids.select("media_id"), heavy=False).mapInPandas(run, DHASH_SCHEMA)
+    return ids.select("media_id").mapInPandas(run, DHASH_SCHEMA)
 
 
 AUDIO_FRAME_SCHEMA = T.StructType(
@@ -891,7 +869,7 @@ def png_crop_rgb_features(
                 }
             )
 
-    return _spread_ids(ids.select("media_id"), heavy=False).mapInPandas(run, CROP_CHANNEL_SCHEMA)
+    return ids.select("media_id").mapInPandas(run, CROP_CHANNEL_SCHEMA)
 
 
 # ------------------------------------------------ audio fingerprinting
@@ -955,7 +933,7 @@ def synth_audio_fp(ids: DataFrame, rate: int = AUDIO_RATE) -> DataFrame:
                 {"media_id": pdf["media_id"], "payload": pdf["media_id"].map(synth)}
             )
 
-    return _spread_ids(ids.select("media_id"), heavy=False).mapInPandas(run, AUDIO_SCHEMA)
+    return ids.select("media_id").mapInPandas(run, AUDIO_SCHEMA)
 
 
 def audio_fingerprint(media: DataFrame) -> DataFrame:

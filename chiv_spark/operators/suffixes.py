@@ -450,25 +450,15 @@ def _adjacent_group_lcp(
     return pairs.select("r", F.least("lcp", "rem_a", "rem_b").alias("lcp"))
 
 
-#: default for the single-task fast-path gate (see
-#: :func:`_small_path_gate`): a subcorpus whose Σ len_d² is at or
+#: the single-task fast-path gate: a subcorpus whose Σ len_d² is at or
 #: below this materializes every suffix (Σ len·(len+1)/2 ≤ gate/2
 #: token slots — tens of MB of strings) and ranks them in ONE
-#: sorted-window task instead of ~20 prefix-doubling jobs. Sized so
-#: the single task stays well under a typical executor partition
-#: budget; a 100 TB candidate subcorpus is orders of magnitude past
-#: it and takes the doubling path unchanged.
+#: sorted-window task instead of ~20 prefix-doubling jobs (measured,
+#: r17: a 78-doc sf0.1 candidate subcorpus took 64 jobs / 5.3-6.5 s on
+#: the doubling path). Sized so the single task stays well under a
+#: typical executor partition budget; a 100 TB candidate subcorpus is
+#: orders of magnitude past it and takes the doubling path unchanged.
 _SMALL_SUFFIX_SUMSQ = 16_000_000
-
-
-def _small_path_gate(spark) -> int:
-    """Gate for :func:`_small_max_repeated_spans`, parameterised via
-    ``spark.chiv.suffix.smallPathSumSq`` (0 disables the fast path —
-    the scratch-spill pytest forces the doubling machinery that way;
-    a cluster deployment tunes it to its task memory budget)."""
-    return int(
-        spark.conf.get("spark.chiv.suffix.smallPathSumSq", str(_SMALL_SUFFIX_SUMSQ))
-    )
 
 
 def _doc_span_argmax(lrp: DataFrame) -> DataFrame:
@@ -510,7 +500,7 @@ def _small_max_repeated_spans(toks: DataFrame, n_pos: int) -> DataFrame:
     to the doubling path's END_RANK sentinel semantics.
 
     The window is deliberately unpartitioned: the caller's gate
-    (:func:`_small_path_gate`) bounds the input, and the explicit
+    (``_SMALL_SUFFIX_SUMSQ``) bounds the input, and the explicit
     ``limit(n_pos)`` below the window states that bound in the plan
     (the registry-wide window audit's post-limit rule). Above the
     gate the doubling path runs and this plan shape never appears.
@@ -562,7 +552,7 @@ def max_repeated_spans(docs: DataFrame, scratch_dir: str | None = None) -> DataF
     trims), plus the 0-based position of the LEFTMOST such span (the
     argmax a trimming pass removes; 0-length spans report pos 0).
 
-    Small inputs (Σ len² at or below :func:`_small_path_gate` — the
+    Small inputs (Σ len² at or below ``_SMALL_SUFFIX_SUMSQ`` — the
     usual shape once the candidate predicate has pruned the corpus,
     and every arriving-shard subcorpus) take the single-task
     suffix-sort path (:func:`_small_max_repeated_spans`, exactness
@@ -581,11 +571,7 @@ def max_repeated_spans(docs: DataFrame, scratch_dir: str | None = None) -> DataF
         )
         .collect()[0]
     )
-    if (
-        n_pos is not None
-        and sumsq is not None
-        and sumsq <= _small_path_gate(docs.sparkSession)
-    ):
+    if n_pos is not None and sumsq is not None and sumsq <= _SMALL_SUFFIX_SUMSQ:
         return _small_max_repeated_spans(toks, int(n_pos))
     positions = token_positions(docs)
     tables, _ = suffix_rank_tables(

@@ -556,7 +556,7 @@ def ingest_forget(spark, state_dir, doc_ids, request_id: int = 0) -> None:
 
     from pyspark import inheritable_thread_target
 
-    @inheritable_thread_target
+    @inheritable_thread_target(spark)
     def _one(tier: str) -> None:
         store.forget(spark, f"{state_dir}/{tier}", ids)
 
@@ -582,7 +582,7 @@ def compact_ingest_state(spark, state_dir) -> dict:
     # is a small job that would otherwise leave the cluster idle
     # serially ×7. Exceptions propagate from pool.map — a failed tier
     # aborts the compaction exactly as the sequential loop did.
-    @inheritable_thread_target
+    @inheritable_thread_target(spark)
     def _one(tier: str) -> tuple[str, tuple]:
         return tier, store.compact(spark, f"{state_dir}/{tier}", n_buckets=ING_PB)
 

@@ -78,98 +78,24 @@ def quality_verdict(docs):
     per-batch leg of the streaming domain-stats fold (a doc's verdict
     is a pure function of its text, so it is batch-computable).
 
-    Every signal depends only on the document's OWN token multiset,
-    so at corpus scale the whole verdict can be a narrow per-row
-    projection (guide §2.4 — remove shuffles outright): the explode →
-    groupBy(doc_id, w) → groupBy(doc_id) shape shuffles the corpus's
-    entire token stream TWICE (token strings as shuffle keys — the
-    heaviest bytes in the plan) to compute what array expressions
-    deliver in place. All four signals are integers, so the derived
-    rounded doubles are bit-identical between the two forms.
-
-    Scale-adaptive form selection (measured, r17). The projection
-    form's bench-scale story turned out worse than its first
-    measurements: with zero exchanges the per-row array work runs in
-    the scan's O(1) parquet tasks (funnel 3.6 s → 21.7 s serialized
-    onto one core), a spread exchange + nondeterministic pushdown
-    guard recovered most of it, but the COMPOSED consumers still
-    regressed (full-bench + fresh-session isolation: domain gate
-    1.45 → 2.5 s, funnel 3.1 → 4.7 s — the two spread exchanges are
-    stage barriers in every branch, and the interpreted HOF lambdas
-    cost more per row than the hash aggs they replaced). The explode
-    + double-agg form is simply the faster shape when the corpus is
-    small enough that two token-keyed exchanges are cheap. So: below
-    ``spark.chiv.verdict.spreadBytes`` (default 1 GiB) the verdict is
-    the original explode → groupBy(doc_id, w) → groupBy(doc_id)
-    aggregation; above it, the per-row array-expression projection —
-    zero corpus-side exchanges, no token strings ever shuffled, fully
-    pushdown-transparent — which is the shape that matters at 100 TB,
-    where the token stream is the heaviest bytes in the plan and the
-    scan's own task layout already provides the parallelism. The two
-    forms compute identical values (integer signals, bit-identical
-    rounded doubles) — parity pinned by
-    tests/test_quality_timeseries.py and both SFs' oracle sweeps."""
-    from chiv_spark.core.sizing import relation_size_est
-
-    # null-text docs: the agg form drops them structurally (explode of
-    # a null array emits no row) while the projection form would emit
-    # a null-signal row — filter before the fork so the two forms
-    # compute the identical relation on any input (r17 advice)
-    sized = docs.select("doc_id", F.trim(F.col("text")).alias("tx")).filter(
-        F.col("tx").isNotNull()
+    One form: explode → groupBy(doc_id, w) → groupBy(doc_id), two hash
+    aggs with map-side partial aggregation, JVM codegen, and a final
+    doc_id exchange every composed consumer's branches share via
+    ReuseExchange. A per-row array-expression projection computes the
+    same integer signals without the token-keyed exchanges, but it
+    ran the composed consumers slower at every measured size (sf0.01,
+    sf0.1, 4× sf0.1 on 4 cores), and the gap grew with size: with no
+    exchange the array work runs in the scan's few parquet tasks
+    (ROADMAP, scale-gate table)."""
+    # a null text explodes to no row: the doc has no verdict
+    tok = docs.select("doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("w"))
+    per = tok.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("tf"))
+    sig = per.groupBy("doc_id").agg(
+        F.sum("tf").cast("long").alias("n_words"),
+        F.count(F.lit(1)).cast("long").alias("n_distinct"),
+        F.max("tf").cast("long").alias("top_tf"),
+        F.sum(F.length("w") * F.col("tf")).cast("long").alias("word_chars"),
     )
-    # input files' size, capped by the plan's row bound (unbounded
-    # here: the corpus file total), instead of an optimizedPlan()
-    # .stats() probe per verdict branch of every composed consumer —
-    # the r17 driver bench's quality-family regression
-    est = relation_size_est(sized)
-    gate = int(
-        docs.sparkSession.conf.get("spark.chiv.verdict.spreadBytes", str(1 << 30))
-    )
-    if est < gate:
-        # small path: the aggregation form — two hash aggs with
-        # map-side partial aggregation, JVM codegen, and a final
-        # doc_id exchange every composed consumer's branches share
-        # via ReuseExchange.
-        tok = sized.select("doc_id", F.explode(F.split(F.col("tx"), r"\s+")).alias("w"))
-        per = tok.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("tf"))
-        sig = per.groupBy("doc_id").agg(
-            F.sum("tf").cast("long").alias("n_words"),
-            F.count(F.lit(1)).cast("long").alias("n_distinct"),
-            F.max("tf").cast("long").alias("top_tf"),
-            F.sum(F.length("w") * F.col("tf")).cast("long").alias("word_chars"),
-        )
-    else:
-        # corpus path: every signal is a function of the document's
-        # OWN token multiset, so the verdict is a narrow per-row
-        # projection — the corpus token stream never crosses an
-        # exchange. top_tf = longest equal-run in the sorted token
-        # array (exact multiset max frequency).
-        sig = (
-            sized.select("doc_id", F.split(F.col("tx"), r"\s+").alias("tk"))
-            .select("doc_id", "tk", F.array_sort("tk").alias("st"))
-            .select(
-                "doc_id",
-                F.size("tk").cast("long").alias("n_words"),
-                F.expr("size(array_distinct(tk))").cast("long").alias("n_distinct"),
-                F.expr(
-                    # longest run of equal tokens in the sorted array; a
-                    # single-token doc has tf 1 (sequence(2, 1) would
-                    # generate a DESCENDING sequence, hence the guard)
-                    "IF(size(st) < 2, 1, aggregate("
-                    " sequence(2, size(st)),"
-                    " named_struct('cur', 1, 'best', 1),"
-                    " (acc, i) -> IF(element_at(st, i) = element_at(st, i - 1),"
-                    "   named_struct('cur', acc.cur + 1,"
-                    "                'best', greatest(acc.best, acc.cur + 1)),"
-                    "   named_struct('cur', 1, 'best', acc.best)),"
-                    " acc -> acc.best))"
-                ).cast("long").alias("top_tf"),
-                F.expr("aggregate(tk, 0L, (a, x) -> a + length(x))")
-                .cast("long")
-                .alias("word_chars"),
-            )
-        )
     nw = F.col("n_words").cast("double")
     mean_len = F.col("word_chars") / nw
     top_frac = F.col("top_tf") / nw

@@ -134,12 +134,16 @@ def _scan(spark: SparkSession, root: str, schema=None) -> DataFrame:
 
 def _tombstones(spark: SparkSession, root: str) -> DataFrame | None:
     d = _tombstone_dir(root)
-    if not exists(spark, d):
+    # read the part files through a glob, not the directory: Spark's
+    # hidden-path filter flags a read root named ``_tombstones`` and
+    # logs "All paths were ignored" on every probe
+    src = f"{d}/*.parquet"
+    if _count(spark, src) == 0:
         return None
     # tombstones written before generation scoping carry doc_id only:
     # they default to the widest scope, suppressing the id in every
     # generation (the old semantics)
-    return spark.read.schema(_TOMB_SCHEMA).parquet(d).select(
+    return spark.read.schema(_TOMB_SCHEMA).parquet(src).select(
         "doc_id",
         F.coalesce("frm", F.lit(SEED_BATCH - 1).cast("long")).alias("frm"),
         F.coalesce("thru", F.lit(1 << 62).cast("long")).alias("thru"),

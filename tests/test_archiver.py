@@ -395,7 +395,7 @@ class TestExecutorSideJsonYaml:
 
 class TestSpreadPath:
     """The single-object encode spread: a one-partition frame whose
-    size estimate clears ``spark.chiv.archive.spreadBytes`` is
+    size estimate clears ``archiver._SPREAD_BYTES`` is
     range-repartitioned so the encode runs in parallel. The bytes must
     not change, and a LIMIT is charged for the rows it can return."""
 
@@ -428,18 +428,19 @@ class TestSpreadPath:
 
     @pytest.mark.parametrize("fmt", ["csv", "json", "yaml"])
     @pytest.mark.parametrize("null", [None, "0"])
-    def test_spread_bytes_match_unspread(self, spark, one_part_df, tmp_path, fmt, null):
+    def test_spread_bytes_match_unspread(
+        self, spark, one_part_df, tmp_path, monkeypatch, fmt, null
+    ):
+        from chiv_spark.core import archiver
+
         tag = f"{fmt}-{null}"
         plain, plain_jobs = self._archive(
             spark, one_part_df, str(tmp_path), fmt, f"plain.{fmt}", null, f"plain-{tag}"
         )
-        spark.conf.set("spark.chiv.archive.spreadBytes", "0")
-        try:
-            spread, spread_jobs = self._archive(
-                spark, one_part_df, str(tmp_path), fmt, f"spread.{fmt}", null, f"spread-{tag}"
-            )
-        finally:
-            spark.conf.unset("spark.chiv.archive.spreadBytes")
+        monkeypatch.setattr(archiver, "_SPREAD_BYTES", 0)
+        spread, spread_jobs = self._archive(
+            spark, one_part_df, str(tmp_path), fmt, f"spread.{fmt}", null, f"spread-{tag}"
+        )
         assert spread_jobs > plain_jobs  # the spread form really ran
         assert spread == plain
 

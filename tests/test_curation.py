@@ -15,6 +15,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from chiv_spark.operators import suffixes
 from chiv_spark.plans import op_counts
 from chiv_spark.queries import REGISTRY
 
@@ -365,20 +366,17 @@ class TestExactSubstrFixpoint:
         # spill; this tiny corpus would take the size-gated
         # single-task path (which never builds rank tables), so force
         # the distributed detector — the test_suffixes.py convention
-        spark.conf.set("spark.chiv.suffix.smallPathSumSq", "0")
-        try:
-            plain = {
-                tuple(r)
-                for r in REGISTRY["dedup_exact_substr_fixpoint"].fn(spark, sf).collect()
-            }
-            scratch = str(tmp_path / "scratch")
-            monkeypatch.setenv("CHIV_SUFFIX_SCRATCH", scratch)
-            spilled = {
-                tuple(r)
-                for r in REGISTRY["dedup_exact_substr_fixpoint"].fn(spark, sf).collect()
-            }
-        finally:
-            spark.conf.unset("spark.chiv.suffix.smallPathSumSq")
+        monkeypatch.setattr(suffixes, "_SMALL_SUFFIX_SUMSQ", 0)
+        plain = {
+            tuple(r)
+            for r in REGISTRY["dedup_exact_substr_fixpoint"].fn(spark, sf).collect()
+        }
+        scratch = str(tmp_path / "scratch")
+        monkeypatch.setenv("CHIV_SUFFIX_SCRATCH", scratch)
+        spilled = {
+            tuple(r)
+            for r in REGISTRY["dedup_exact_substr_fixpoint"].fn(spark, sf).collect()
+        }
         assert spilled == plain
         subs = [d for d in os.listdir(scratch) if d.startswith("sfx-")]
         # one subdir holds the candidate pins; the detector passes

@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -154,7 +155,11 @@ class TestIngestLifecycle:
         assert before[21]["f1"] is True and before[21]["f3"] is True
 
         ids = spark.createDataFrame([(1,)], "doc_id long")
-        ingest_forget(spark, state, ids, request_id=0)
+        # the per-tier pool workers inherit the caller's job tags: no
+        # "Spark session is not provided" warning from forget or compact
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            ingest_forget(spark, state, ids, request_id=0)
 
         # probe THROUGH the tombstones (pre-compaction): the former
         # near-dup of the deleted doc now survives every tier
@@ -193,7 +198,15 @@ class TestIngestLifecycle:
         # compaction: physical drop — the deleted text is GONE from
         # the post-compaction parquet bytes, and the probe result is
         # unchanged (tombstone reads == compacted reads)
-        compact_ingest_state(spark, state)
+        with warnings.catch_warnings(record=True) as caught_compact:
+            warnings.simplefilter("always")
+            compact_ingest_state(spark, state)
+        untagged = [
+            str(w.message)
+            for w in caught + caught_compact
+            if "Tags will not be inherited" in str(w.message)
+        ]
+        assert untagged == []
         import glob
 
         blob = b"".join(

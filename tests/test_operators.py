@@ -46,6 +46,36 @@ class TestMinHash:
         assert sig.count() == 4 * dedup.NUM_PERMS
 
 
+class TestMinLabelComponents:
+    # a 6-node path (five propagation rounds to converge) plus two cliques
+    PAIRS = (
+        [(10 + i, 11 + i) for i in range(5)]
+        + [(a, b) for a in range(20, 24) for b in range(a + 1, 24)]
+        + [(30, 31), (30, 32), (31, 32)]
+    )
+
+    @staticmethod
+    def _run(spark, pairs):
+        """(sorted (node, cluster_id) rows, Spark jobs the call ran)."""
+        dag = spark.sparkContext._jsc.sc().dagScheduler()  # noqa: SLF001
+        first = dag.nextJobId()
+        rows = sorted(tuple(r) for r in dedup.min_label_components(pairs).collect())
+        return rows, dag.nextJobId() - first
+
+    def test_distributed_loop_matches_union_find(self, spark, monkeypatch):
+        pairs = spark.createDataFrame(self.PAIRS, "doc_a long, doc_b long")
+        small, small_jobs = self._run(spark, pairs)
+        monkeypatch.setattr(dedup, "_SMALL_PATH_EDGES", 0)
+        loop, loop_jobs = self._run(spark, pairs)
+        assert loop_jobs > small_jobs  # the propagation loop really ran
+        assert loop == small
+        assert small == (
+            [(n, 10) for n in range(10, 16)]
+            + [(n, 20) for n in range(20, 24)]
+            + [(n, 30) for n in range(30, 33)]
+        )
+
+
 class TestSimHash:
     def test_exact_dup_zero_distance(self, docs):
         # max_hamming stays within the 4-chunk pigeonhole guarantee

@@ -109,23 +109,6 @@ def test_quality_filter_flags_are_consistent(spark):
         assert r["keep"] == expect, r
 
 
-def test_quality_verdict_forms_are_identical(spark):
-    """r17: quality_verdict selects its physical form by input size —
-    explode + double-agg below spark.chiv.verdict.spreadBytes, the
-    exchange-free per-row array projection above it (the 100 TB
-    shape). The two forms must emit the identical relation; force
-    each via the conf and compare row sets exactly."""
-    fn = REGISTRY["text_quality_filter"].fn
-    out = {}
-    for label, gate in (("agg", str(1 << 40)), ("proj", "0")):
-        spark.conf.set("spark.chiv.verdict.spreadBytes", gate)
-        try:
-            out[label] = {tuple(r) for r in fn(spark, SF).collect()}
-        finally:
-            spark.conf.unset("spark.chiv.verdict.spreadBytes")
-    assert out["agg"] and out["agg"] == out["proj"]
-
-
 def test_ntile_quartiles_partition_each_group(spark):
     out = REGISTRY["window_ntile_distribution"].fn(spark, SF)
     per = out.groupBy("o_orderpriority").agg(

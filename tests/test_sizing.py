@@ -4,14 +4,16 @@ by the analyzed plan's row bound × its schema's default row size."""
 from __future__ import annotations
 
 import os
+import pathlib
 
 import pytest
 
+from chiv_spark.core import sizing
+from chiv_spark.core.archiver import _SPREAD_BYTES as SPREAD_GATE
 from chiv_spark.core.sizing import relation_size_est
 from chiv_spark.core.state import local_path
 
 SF01_LINEITEM = "/root/testdata/sf0.1/lineitem.parquet"
-SPREAD_GATE = 8 << 20  # the archiver's default spark.chiv.archive.spreadBytes
 
 
 def file_total(df) -> int:
@@ -23,12 +25,17 @@ def analyzed_size(df) -> int:
 
 
 @pytest.fixture(scope="module")
-def table(spark, tmp_path_factory):
+def table_path(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("sizing") / "t")
     spark.range(20_000, numPartitions=2).selectExpr(
         "id", "cast(id * 7 as string) as s"
     ).write.parquet(path)
-    return spark.read.parquet(path)
+    return path
+
+
+@pytest.fixture(scope="module")
+def table(spark, table_path):
+    return spark.read.parquet(table_path)
 
 
 def test_unbounded_scan_is_the_file_total(table):
@@ -62,3 +69,35 @@ def test_no_input_files_keeps_the_analyzed_stats(spark):
     assert df.inputFiles() == []
     for frame in (df, df.limit(1)):
         assert relation_size_est(frame) == analyzed_size(frame)
+
+
+def test_estimate_runs_no_optimizer_and_sums_join_leaves(spark, table_path, tmp_path):
+    """The estimate reads the analyzed plan only: on fresh frames the
+    planning tracker records the analysis phase and nothing else. A
+    join is charged both inputs' file totals."""
+    other_path = str(tmp_path / "other")
+    spark.range(5_000, numPartitions=1).selectExpr("id", "id * 2 as k").write.parquet(other_path)
+    frames = {
+        "scan": spark.read.parquet(table_path),
+        "filter+project": spark.read.parquet(table_path).filter("id > 5").select("s"),
+        "limit": spark.read.parquet(table_path).orderBy("id").limit(100),
+        "join": spark.read.parquet(table_path).join(spark.read.parquet(other_path), "id"),
+    }
+    for name, df in frames.items():
+        relation_size_est(df)
+        phases = df._jdf.queryExecution().tracker().phases()
+        assert phases.size() == 1 and phases.contains("analysis"), name
+    files = file_total(spark.read.parquet(table_path))
+    assert relation_size_est(frames["join"]) == files + file_total(spark.read.parquet(other_path))
+
+
+def test_no_module_reads_a_chiv_conf_key():
+    """Form gates are module constants, not session options: no module
+    reads or names a ``spark.chiv.*`` key."""
+    pkg = pathlib.Path(sizing.__file__).resolve().parents[1]
+    offenders = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if "spark.chiv." in p.read_text(encoding="utf-8")
+    )
+    assert offenders == []

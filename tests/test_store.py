@@ -202,3 +202,13 @@ def test_generation_writes_and_swaps_live_only_in_the_store():
         if needle in p.read_text(encoding="utf-8")
     )
     assert offenders == []
+
+
+def test_tombstone_dir_without_part_files_reads_as_none(spark, tmp_path):
+    """Tombstones are read through a part-file glob: a ``_tombstones``
+    dir holding no part file is no pending deletion set."""
+    tomb = tmp_path / "store" / "_tombstones"
+    tomb.mkdir(parents=True)
+    (tomb / "_SUCCESS").write_bytes(b"")
+    assert store.read_tombstones(spark, str(tmp_path / "store")) is None
+

@@ -12,6 +12,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from chiv_spark.operators import suffixes
 from chiv_spark.operators.suffixes import max_repeated_spans, suffix_rank_tables, token_positions
 
 
@@ -136,20 +137,17 @@ class TestSmallPathParity:
         (11, " ".join(f"t{i}" for i in range(40)) + " endtwo"),
     ]
 
-    def test_small_and_doubling_paths_identical(self, spark):
+    def test_small_and_doubling_paths_identical(self, spark, monkeypatch):
         df = spark.createDataFrame(self.ROWS, "doc_id long, text string")
         small = {
             (r.doc_id, r.n_tokens, r.max_rep_span, r.span_pos)
             for r in max_repeated_spans(df).collect()
         }
-        spark.conf.set("spark.chiv.suffix.smallPathSumSq", "0")
-        try:
-            doubling = {
-                (r.doc_id, r.n_tokens, r.max_rep_span, r.span_pos)
-                for r in max_repeated_spans(df).collect()
-            }
-        finally:
-            spark.conf.unset("spark.chiv.suffix.smallPathSumSq")
+        monkeypatch.setattr(suffixes, "_SMALL_SUFFIX_SUMSQ", 0)
+        doubling = {
+            (r.doc_id, r.n_tokens, r.max_rep_span, r.span_pos)
+            for r in max_repeated_spans(df).collect()
+        }
         assert small == doubling
 
     def test_default_gate_takes_single_job_path(self, spark):
@@ -179,7 +177,7 @@ class TestEmptyCorpus:
 
 
 class TestScratchSpill:
-    def test_scratch_dir_matches_checkpoint_path(self, spark, tmp_path):
+    def test_scratch_dir_matches_checkpoint_path(self, spark, tmp_path, monkeypatch):
         """The 100 TB spill path (r10 verdict task 5): with
         scratch_dir set, every round table is written to parquet and
         read back instead of localCheckpoint-pinned — results must be
@@ -203,14 +201,11 @@ class TestScratchSpill:
         # force the doubling machinery: this test pins the SPILL path,
         # which the r17 size-gated single-task fast path would
         # otherwise bypass at this input size
-        spark.conf.set("spark.chiv.suffix.smallPathSumSq", "0")
-        try:
-            spilled = {
-                (r.doc_id, r.n_tokens, r.max_rep_span, r.span_pos)
-                for r in max_repeated_spans(df, scratch_dir=scratch).collect()
-            }
-        finally:
-            spark.conf.unset("spark.chiv.suffix.smallPathSumSq")
+        monkeypatch.setattr(suffixes, "_SMALL_SUFFIX_SUMSQ", 0)
+        spilled = {
+            (r.doc_id, r.n_tokens, r.max_rep_span, r.span_pos)
+            for r in max_repeated_spans(df, scratch_dir=scratch).collect()
+        }
         assert spilled == plain
         # the call spilled under its own unique subdir of the shared
         # root (r11 ADVICE: two calls sharing a root must never
@@ -228,11 +223,7 @@ class TestScratchSpill:
         assert "rank_L8" in dirs and len(dirs) >= 2
         # a second call on the SAME root lands in a fresh subdir and
         # leaves the first call's tables untouched
-        spark.conf.set("spark.chiv.suffix.smallPathSumSq", "0")
-        try:
-            max_repeated_spans(df, scratch_dir=scratch).count()
-        finally:
-            spark.conf.unset("spark.chiv.suffix.smallPathSumSq")
+        max_repeated_spans(df, scratch_dir=scratch).count()
         subs2 = sorted(d for d in os.listdir(scratch) if d.startswith("sfx-"))
         assert len(subs2) == 2 and subs[0] in subs2
         tables, _ = suffix_rank_tables(
