@@ -3210,8 +3210,6 @@ def ann_delete_then_probe(spark, sf_dir):
         write_ivfpq_artifacts,
     )
 
-    from concurrent.futures import ThreadPoolExecutor
-
     emb = t(spark, sf_dir, "embeddings")
     work = tempfile.mkdtemp(prefix="chiv-anndel-")
     art, codes_dir = f"{work}/artifacts", f"{work}/codes"
@@ -3219,26 +3217,13 @@ def ann_delete_then_probe(spark, sf_dir):
     cents = spark.read.parquet(f"{art}/cents")
     cb = spark.read.parquet(f"{art}/codebook")
 
-    # the corpus encode+write and the probe-cell collect both depend
-    # only on the frozen artifacts — independent jobs, overlapped so
-    # the bounded collect back-fills the encode's tail (r18, guide
-    # §2.6; the ingest takedown's fold/compact pool is the precedent).
-    # The cells collect is bounded (≤ n_cells values, the
-    # touched-bucket precedent) and drives the pruned index scan.
-    def _encode_codes():
-        write_codes_generation(
-            similarity.ivfpq_encode_against(emb, cents, cb, dim=EMB_DIM), codes_dir, 0
-        )
-
-    def _probe_cells():
-        _, probes = similarity.ivfpq_query_probes(emb, cents)
-        return sorted(r.cell for r in probes.select("cell").distinct().collect())
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_codes = pool.submit(_encode_codes)
-        f_cells = pool.submit(_probe_cells)
-        f_codes.result()
-        cells = f_cells.result()
+    write_codes_generation(
+        similarity.ivfpq_encode_against(emb, cents, cb, dim=EMB_DIM), codes_dir, 0
+    )
+    # the cells collect is bounded (≤ n_cells values, the
+    # touched-bucket precedent) and drives the pruned index scan
+    _, probes = similarity.ivfpq_query_probes(emb, cents)
+    cells = sorted(r.cell for r in probes.select("cell").distinct().collect())
 
     def probe():
         return similarity.ivfpq_search_index(

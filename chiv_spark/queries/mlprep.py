@@ -21,6 +21,7 @@ from chiv_spark.functions.hashing import duckdb_hash64, hash64
 from chiv_spark.functions.vectors import l2_norm_fixed
 from chiv_spark.queries.base import query, t
 from chiv_spark.queries.llm import EMB_DIM, _FP as _DOC_FP, _TOKS as _DOC_TOKS
+from chiv_spark.session import overlap
 
 #: SQL twin of hash64(concat('smp:', doc_id)) — shared literal salt
 _H = "(('0x' || substring(md5('smp:' || doc_id::VARCHAR), 1, 15))::BIGINT)"
@@ -860,42 +861,40 @@ def _build_capstone_flags(spark, sf_dir):
     from chiv_spark.queries.base import REGISTRY
 
     docs = t(spark, sf_dir, "documents").select("doc_id")
-    # the eight stage relations are independent until the final flag
-    # joins, and several of them run EAGER driver jobs at CONSTRUCTION
-    # time (the suffix detector's candidate pinning ~4.3 s, each media
-    # canonical's component collect ~1.4-2.0 s — measured r18, fresh
-    # session). Built sequentially that was ~10 s of serial driver
-    # work per capstone evaluation; a small pool overlaps it (guide
-    # §2.6 — job descriptions are thread-local, exceptions propagate
-    # through result()).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_para = pool.submit(REGISTRY["dedup_paragraph_exact"].fn, spark, sf_dir)
-        f_spans = pool.submit(REGISTRY["dedup_exact_substr"].fn, spark, sf_dir)
-        f_ndrop = pool.submit(REGISTRY["dedup_minhash_lsh"].fn, spark, sf_dir)
-        f_ov = pool.submit(REGISTRY["decontaminate_eval_overlap"].fn, spark, sf_dir)
-        f_ne = pool.submit(REGISTRY["decontaminate_neardup_eval"].fn, spark, sf_dir)
-        f_cans = {
-            m: pool.submit(REGISTRY[f"dedup_{name}_canonical"].fn, spark, sf_dir)
-            for m, name in [("img", "image"), ("aud", "audio"), ("vid", "video")]
-        }
-        para = f_para.result().select(
-            "doc_id", (F.col("cleaned_text") != "").alias("f1")
-        )
-        spans = f_spans.result().select("doc_id", F.col("keep").alias("f2"))
-        ndrop = (
-            f_ndrop.result()
-            .select(F.col("doc_b").alias("doc_id"))
-            .distinct()
-            .withColumn("__nd", F.lit(1))
-        )
-        ov = f_ov.result().select("doc_id").distinct().withColumn("__ov", F.lit(1))
-        ne = f_ne.result().select("doc_id").distinct().withColumn("__ne", F.lit(1))
-        # each canonical relation has TWO consumers (keeper dim + count
-        # row) above distinct subtrees — persist pays here (ReuseExchange
-        # can't dedup across them), and the relations are <= 60 rows
-        cans = {m: f.result().persist() for m, f in f_cans.items()}
+    # the eight stage builders are independent, and several fire eager
+    # jobs at construction (dedup_exact_substr 8 jobs, each media
+    # canonical 7-8, warm at sf0.01). Overlapping them hides those jobs:
+    # 13.65 → 11.06 s at sf0.1 (ROADMAP direction 7). Direction 2 makes
+    # the builders lazy; then the overlap has nothing left to hide.
+    para, spans, ndrop, ov, ne, *media = overlap(
+        spark,
+        *[
+            lambda name=name: REGISTRY[name].fn(spark, sf_dir)
+            for name in (
+                "dedup_paragraph_exact",
+                "dedup_exact_substr",
+                "dedup_minhash_lsh",
+                "decontaminate_eval_overlap",
+                "decontaminate_neardup_eval",
+                "dedup_image_canonical",
+                "dedup_audio_canonical",
+                "dedup_video_canonical",
+            )
+        ],
+    )
+    para = para.select("doc_id", (F.col("cleaned_text") != "").alias("f1"))
+    spans = spans.select("doc_id", F.col("keep").alias("f2"))
+    ndrop = (
+        ndrop.select(F.col("doc_b").alias("doc_id"))
+        .distinct()
+        .withColumn("__nd", F.lit(1))
+    )
+    ov = ov.select("doc_id").distinct().withColumn("__ov", F.lit(1))
+    ne = ne.select("doc_id").distinct().withColumn("__ne", F.lit(1))
+    # each canonical relation has TWO consumers (keeper dim + count
+    # row) above distinct subtrees — persist pays here (ReuseExchange
+    # can't dedup across them), and the relations are <= 60 rows
+    cans = {m: rel.persist() for m, rel in zip(_ATT_MODS, media)}
     att = docs.select(
         "doc_id", *[_att_col(m).alias(f"{m}_mid") for m in _ATT_MODS]
     )

@@ -4,14 +4,20 @@ Single place where engine-wide performance knobs live so that tests,
 bench.py and the driver entrypoint all run the same configuration.
 Defaults are chosen for the 100 TB design point (AQE on, skew-join
 handling on, Arrow on for the few Pandas-UDF paths) while remaining
-correct on local[N].
+correct on local[N]. ``overlap`` is the one way to run Spark jobs
+from several driver threads on that session.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import SparkSession
+
+#: most driver threads one overlap() call runs at once
+_OVERLAP_WIDTH = 4
 
 
 def get_spark(
@@ -69,3 +75,24 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def overlap(spark: SparkSession, *thunks: Callable[[], Any]) -> list:
+    """Run independent Spark actions from up to four driver threads so
+    one job's tail back-fills the next job's tasks. Returns the thunks'
+    results in thunk order; a thunk's exception re-raises here.
+
+    Each thunk is wrapped in ``inheritable_thread_target(spark)`` at
+    call time, one wrapper per thunk: pyspark copies the caller's local
+    properties (job group, description) and tags when the wrapper is
+    built, not when the thread starts, so the jobs stay in the caller's
+    job group and ``cancelJobGroup`` reaches them. A thunk must not
+    mutate session conf: conf is session-wide, so a change made in one
+    thread leaks into every other thunk and into the caller."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=min(_OVERLAP_WIDTH, len(thunks))) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+        return [f.result() for f in futures]

@@ -40,8 +40,8 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
       engine's UTC session timezone;
     - plain ``timestamp`` → no-op.
 
-    Every events consumer (batch catalog + the three streaming readers)
-    must go through this: ``unix_micros()`` and ``withWatermark()``
+    Every events consumer (``read_table`` and ``read_event_stream``)
+    goes through this: ``unix_micros()`` and ``withWatermark()``
     both reject TIMESTAMP_NTZ.
     """
     from pyspark.sql import functions as F
@@ -71,6 +71,21 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return normalize_event_ts(df) if name == "events" else df
 
     return state.get_or_build(spark, "table", path, state.fingerprint([path]), build)
+
+
+def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a streaming DataFrame with a normalized
+    ``ts``. The file stream source needs a directory, so it streams
+    the sf dir with a glob filter selecting only the events file,
+    under the static table's schema."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    sf = sf_dir.rstrip("/")
+    static = spark.read.parquet(f"{sf}/events.parquet")
+    return normalize_event_ts(
+        spark.readStream.schema(static.schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf)
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str, register: bool = True) -> dict[str, DataFrame]:

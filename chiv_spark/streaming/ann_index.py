@@ -82,26 +82,10 @@ def write_ivfpq_artifacts(
     ``<art_dir>/cents`` (cell, pos, cm) and ``<art_dir>/codebook``
     (sub, c, cvec) — n_cells × dim and m × n_codes × dim/m integers,
     KB-sized at any corpus scale."""
-    from concurrent.futures import ThreadPoolExecutor
-
     cents, cb = similarity.ivfpq_artifacts(base_emb, dim=dim, **kw)
-    # the two artifact writes are independent jobs (cents is a cheap
-    # first-8-vectors scan, the codebook carries the train chain) —
-    # overlap them so the small job back-fills the train's tail
-    # (r18, guide §2.6); exceptions propagate through result()
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fa = pool.submit(
-            lambda: cents.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{art_dir.rstrip('/')}/cents")
-        )
-        fb = pool.submit(
-            lambda: cb.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{art_dir.rstrip('/')}/codebook")
-        )
-        fa.result()
-        fb.result()
+    art = art_dir.rstrip("/")
+    cents.coalesce(1).write.mode("overwrite").parquet(f"{art}/cents")
+    cb.coalesce(1).write.mode("overwrite").parquet(f"{art}/codebook")
 
 
 def read_codes_pruned(

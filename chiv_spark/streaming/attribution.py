@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from chiv_spark.sources.catalog import read_event_stream
+
 ATTRIB_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -96,15 +98,7 @@ def run_streaming_attribution(
     # _attribute is a module-level function → cloudpickle serializes
     # it by reference; ship the package so workers can import it
     ensure_shipped(spark)
-    from chiv_spark.sources.catalog import normalize_event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    stream = normalize_event_ts(
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+    stream = read_event_stream(spark, sf_dir)
     events = stream.select(
         "user_id", "event_id", "event_type", F.unix_micros("ts").alias("ts_us")
     )

@@ -23,17 +23,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chiv_spark.sources.catalog import normalize_event_ts, read_table
-
-
-def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    return normalize_event_ts(
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+from chiv_spark.sources.catalog import read_event_stream, read_table
 
 
 def purchases_by_segment(spark: SparkSession, sf_dir: str, checkpoint_dir: str) -> DataFrame:
@@ -43,7 +33,7 @@ def purchases_by_segment(spark: SparkSession, sf_dir: str, checkpoint_dir: str) 
     The stream-static join is stateless: each microbatch joins against
     the (unhinted) static side, so the plan survives any customer-table
     size. The aggregation is the only stateful operator."""
-    purchases = _event_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
+    purchases = read_event_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
     cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     name = f"purchases_by_segment_{uuid.uuid4().hex[:8]}"
     q = (
@@ -72,7 +62,7 @@ def deduped_user_types(spark: SparkSession, sf_dir: str, checkpoint_dir: str) ->
     The availableNow run processes the file in one batch before the
     watermark advances, so nothing is dropped as late and the emitted
     set is exactly the batch DISTINCT (first occurrence per pair)."""
-    events = _event_stream(spark, sf_dir)
+    events = read_event_stream(spark, sf_dir)
     name = f"deduped_user_types_{uuid.uuid4().hex[:8]}"
     q = (
         events.withWatermark("ts", "2 hours")

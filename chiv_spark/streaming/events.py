@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from chiv_spark.sources.catalog import read_event_stream
+
 
 def windowed_event_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
     """Tumbling-window per-type aggregation with late-data watermark —
@@ -45,19 +47,7 @@ def run_events_stream(
     """Run the windowed aggregation as a real stream over the events
     parquet (file source, availableNow trigger, memory sink) and
     return the completed result as a DataFrame."""
-    # normalize ts across the generator's parquet encodings (nanos-as-
-    # long / TIMESTAMP_NTZ / TIMESTAMP) — watermarks reject NTZ
-    from chiv_spark.sources.catalog import normalize_event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    # the file stream source needs a directory: stream the sf dir with
-    # a glob filter selecting only the events file
-    stream = normalize_event_ts(
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+    stream = read_event_stream(spark, sf_dir)
     agg = windowed_event_counts(stream, window=window, watermark=watermark)
     name = "events_windowed"
     q = (
@@ -88,15 +78,7 @@ def run_windowed_distinct_users(
     streaming COUNT(DISTINCT) would hold every user id in the state
     store. Returns (window_start, approx_users) with the estimate
     materialized from the final sketch."""
-    from chiv_spark.sources.catalog import normalize_event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    stream = normalize_event_ts(
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+    stream = read_event_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"))
@@ -133,15 +115,7 @@ def run_native_session_windows(
     max(event time) - delay, so the emitted set is exactly the batch
     sessions whose end (last event + gap) is at or below it — the
     oracle states that closure in SQL."""
-    from chiv_spark.sources.catalog import normalize_event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    stream = normalize_event_ts(
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+    stream = read_event_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy("user_id", F.session_window("ts", gap).alias("w"))

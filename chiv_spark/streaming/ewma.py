@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from chiv_spark.sources.catalog import read_event_stream
+
 #: smoothing factor — MUST equal queries/timeseries.py:_EWMA_A (the
 #: shared-oracle contract); imported there from this constant's twin
 #: would be circular, so both pin 0.3 and the batch-twin test asserts
@@ -98,15 +100,7 @@ def run_streaming_ewma(
     from chiv_spark.pyship import ensure_shipped
 
     ensure_shipped(spark)
-    from chiv_spark.sources.catalog import normalize_event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    stream = normalize_event_ts(
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+    stream = read_event_stream(spark, sf_dir)
     events = stream.filter(F.col("value").isNotNull()).select(
         "user_id",
         "event_id",

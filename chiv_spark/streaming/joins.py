@@ -15,17 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from chiv_spark.sources.catalog import normalize_event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    return normalize_event_ts(
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+from chiv_spark.sources.catalog import read_event_stream
 
 
 def purchases_with_clicks(
@@ -34,7 +24,7 @@ def purchases_with_clicks(
     """Run a stream-stream interval join (purchase ⋈ prior click of
     the same user within ``window``) to completion under availableNow
     and return the joined rows."""
-    ev = _event_stream(spark, sf_dir)
+    ev = read_event_stream(spark, sf_dir)
     purchases = (
         ev.filter(F.col("event_type") == "purchase")
         .select(
@@ -85,7 +75,7 @@ def run_streaming_archive(
     <fmt>/batch=<id>/``. Returns the number of micro-batches run."""
     from chiv_spark.core.archiver import Archiver
 
-    ev = _event_stream(spark, sf_dir)
+    ev = read_event_stream(spark, sf_dir)
     a = Archiver(spark)
     batches: list[int] = []
 

@@ -155,11 +155,25 @@ class TestIngestLifecycle:
         assert before[21]["f1"] is True and before[21]["f3"] is True
 
         ids = spark.createDataFrame([(1,)], "doc_id long")
-        # the per-tier pool workers inherit the caller's job tags: no
-        # "Spark session is not provided" warning from forget or compact
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            ingest_forget(spark, state, ids, request_id=0)
+        # the per-tier jobs inherit the caller's job group and tags: all
+        # of forget's and compact's jobs land in group "g", and neither
+        # logs pyspark's "Spark session is not provided" warning
+        sc = spark.sparkContext
+        dag = sc._jsc.sc().dagScheduler()  # noqa: SLF001
+
+        def nid():
+            n = dag.nextJobId()
+            return int(n if isinstance(n, int) else n.get())
+
+        sc.setJobGroup("g", "ingest lifecycle")
+        try:
+            first = nid()
+            with warnings.catch_warnings(record=True) as caught:
+                warnings.simplefilter("always")
+                ingest_forget(spark, state, ids, request_id=0)
+            fired = set(range(first, nid()))
+        finally:
+            sc._jsc.clearJobGroup()  # noqa: SLF001
 
         # probe THROUGH the tombstones (pre-compaction): the former
         # near-dup of the deleted doc now survives every tier
@@ -198,9 +212,16 @@ class TestIngestLifecycle:
         # compaction: physical drop — the deleted text is GONE from
         # the post-compaction parquet bytes, and the probe result is
         # unchanged (tombstone reads == compacted reads)
-        with warnings.catch_warnings(record=True) as caught_compact:
-            warnings.simplefilter("always")
-            compact_ingest_state(spark, state)
+        sc.setJobGroup("g", "ingest lifecycle")
+        try:
+            first = nid()
+            with warnings.catch_warnings(record=True) as caught_compact:
+                warnings.simplefilter("always")
+                compact_ingest_state(spark, state)
+            fired |= set(range(first, nid()))
+        finally:
+            sc._jsc.clearJobGroup()  # noqa: SLF001
+        assert fired <= set(sc.statusTracker().getJobIdsForGroup("g"))
         untagged = [
             str(w.message)
             for w in caught + caught_compact

@@ -204,6 +204,21 @@ def test_generation_writes_and_swaps_live_only_in_the_store():
     assert offenders == []
 
 
+def test_driver_threads_live_only_in_overlap():
+    """One way to overlap Spark jobs from the driver: no module other
+    than session.py (home of ``overlap``) starts a thread pool or wraps
+    a thread target by hand."""
+    pkg = pathlib.Path(store.__file__).resolve().parents[1]
+    offenders = sorted(
+        f"{p.relative_to(pkg)}: {needle}"
+        for p in pkg.rglob("*.py")
+        if p.relative_to(pkg) != pathlib.Path("session.py")
+        for needle in ("ThreadPoolExecutor", "concurrent.futures", "inheritable_thread_target")
+        if needle in p.read_text(encoding="utf-8")
+    )
+    assert offenders == []
+
+
 def test_tombstone_dir_without_part_files_reads_as_none(spark, tmp_path):
     """Tombstones are read through a part-file glob: a ``_tombstones``
     dir holding no part file is no pending deletion set."""

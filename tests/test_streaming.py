@@ -59,10 +59,10 @@ class TestStreamingDedup:
 class TestStreamingArchive:
     def test_foreachbatch_csv_matches_batch_archive(self, spark, sf_dir, tmp_path):
         from chiv_spark.core.archiver import Archiver
-        from chiv_spark.streaming.enrich import _event_stream
+        from chiv_spark.sources.catalog import read_event_stream
         from chiv_spark.streaming.archive import archive_stream
 
-        stream = _event_stream(spark, sf_dir).select("event_id", "user_id", "event_type")
+        stream = read_event_stream(spark, sf_dir).select("event_id", "user_id", "event_type")
         bucket = str(tmp_path / "bucket")
         keys = archive_stream(
             stream,
@@ -90,10 +90,10 @@ class TestStreamingArchive:
     def test_key_template_requires_batch_id(self, spark, sf_dir, tmp_path):
         import pytest
 
-        from chiv_spark.streaming.enrich import _event_stream
+        from chiv_spark.sources.catalog import read_event_stream
         from chiv_spark.streaming.archive import archive_stream
 
-        stream = _event_stream(spark, sf_dir)
+        stream = read_event_stream(spark, sf_dir)
         with pytest.raises(ValueError, match="batch_id"):
             archive_stream(stream, str(tmp_path / "b"), str(tmp_path / "c"), key_template="fixed.csv")
 
@@ -834,6 +834,37 @@ class TestSuffixStoreDeletion:
             for r in probe_suffix_store(spark, delta, work, 10).collect()
         }
         assert got == {100: (0, True)}
+
+    def test_overlapped_jobs_stay_in_the_callers_job_group(self, spark, tmp_path):
+        """Every job the suffix store's seed and forget fire, and every
+        job of a direct overlap() call, runs in the caller's job group,
+        so cancelJobGroup reaches the work done on driver threads."""
+        from chiv_spark.session import overlap
+        from chiv_spark.streaming.suffix_index import suffix_forget
+
+        sc = spark.sparkContext
+        dag = sc._jsc.sc().dagScheduler()  # noqa: SLF001
+
+        def nid():
+            n = dag.nextJobId()
+            return int(n if isinstance(n, int) else n.get())
+
+        sc.setJobGroup("g", "overlap reach")
+        spark.addTag("t")
+        try:
+            first = nid()
+            work, _ = self._seed(spark, tmp_path)
+            suffix_forget(spark, work, [1])
+            counts = overlap(
+                spark, lambda: spark.range(3).count(), lambda: spark.range(5).count()
+            )
+            fired = set(range(first, nid()))
+        finally:
+            spark.removeTag("t")
+            sc._jsc.clearJobGroup()  # noqa: SLF001
+        assert counts == [3, 5]
+        assert fired, "no jobs in the window"
+        assert fired <= set(sc.statusTracker().getJobIdsForGroup("g"))
 
 
 class TestIndexLayout:
