@@ -13,18 +13,28 @@ the storage writer), keeping memory O(one partition) regardless of row
 count — the same bounded-memory guarantee the reference gets from its
 pipe (README.md:130-134).
 
-Two sink modes:
+Two sink modes, for the built-in formats csv, json and yaml:
 - ``distributed=False`` (default, reference parity): exactly one
-  object ``bucket/key``, byte-stable encoder output.
-- ``distributed=True`` (the 100 TB path): ``df.write`` emits a
-  directory of part files in parallel — CSV/JSON(NDJSON)/parquet via
-  Spark-native writers, YAML via a per-partition encoder. No driver
-  bottleneck; use this at scale.
+  object ``bucket/key``, byte-stable encoder output. A custom
+  ``FormatterFunc`` runs only here.
+- ``distributed=True`` (the 100 TB path): a directory of part files
+  written in parallel — CSV and JSON (NDJSON) through Spark's native
+  writers, YAML through the partition encoder; ``s3://`` buckets
+  upload partition-encoded parts from the executors (core/s3dist.py).
+  No driver bottleneck; use this at scale.
+
+Every sink that encodes in Python encodes through one
+``_partition_encoder`` per format (``_ENCODINGS``); the per-row
+``Formatter`` classes keep the open()/close() framing, the custom
+formatter path and the reference role in the differential tests.
 """
 
 from __future__ import annotations
 
 import contextlib
+import io
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,9 +45,19 @@ from chiv_spark.core.options import ArchiveOptions
 from chiv_spark.core.storage import storage_for
 from chiv_spark.formats import FORMATS
 from chiv_spark.formats.base import Formatter, FormatterFunc
+from chiv_spark.formats.csv_format import _quote_field
+from chiv_spark.formats.encode import (
+    go_float_str,
+    go_g_float_str,
+    json_escape,
+    json_value,
+    rfc3339,
+    to_csv_str,
+)
+from chiv_spark.formats.yaml_format import _yaml_scalar, _yaml_str
 
 
-# Spark types whose cells the fast-path encoders render without the
+# Spark types whose cells the partition encoder renders without the
 # per-value isinstance chain, by kind (exact classes: a column's
 # renderer is looked up by ``type(dtype)``)
 _KINDS = {
@@ -57,7 +77,7 @@ _KINDS = {
 
 
 def _column_renderers(dtypes: list[T.DataType], placeholders: list[object], render, by_kind: dict):
-    """Per-column cell renderers for the single-object fast paths.
+    """Per-column cell renderers for the partition encoder.
 
     A column whose kind (``_KINDS``) is in ``by_kind`` renders its
     values with that function, which must return what ``render`` (the
@@ -95,45 +115,107 @@ def _bool_text(v: bool) -> str:
     return "true" if v else "false"
 
 
-def _csv_partition_encoder(dtypes: list[T.DataType], placeholders: list[object]):
-    """Executor-side CSV row encoding for the single-object fast path:
-    one UTF-8 chunk per ~10k rows, rows in partition order. Numeric/
-    bool/date/timestamp renderings can never contain a quotable
-    character (comma, quote, CR/LF, leading Go-space, or the literal
-    ``\\.``), so only string-ish columns pay the quote scan. Output is
-    byte-identical to CsvFormatter's per-row path (golden-file tests
-    pin this)."""
+def _csv_value(v: object) -> str:
+    return _quote_field(to_csv_str(v))
 
-    def enc(rows):
-        from chiv_spark.core.archiver import _bool_text, _column_renderers
-        from chiv_spark.formats.csv_format import _quote_field
-        from chiv_spark.formats.encode import go_float_str, rfc3339, to_csv_str
 
-        fns = _column_renderers(
-            dtypes,
-            placeholders,
-            lambda v: _quote_field(to_csv_str(v)),
-            {
-                "int": str,
-                "float": go_float_str,
-                "decimal": str,
-                "bool": _bool_text,
-                "date": lambda v: v.isoformat(),
-                "timestamp": rfc3339,
-                "str": _quote_field,
-            },
-        )
-        buf: list[str] = []
-        for row in rows:
-            buf.append(",".join([f(v) for f, v in zip(fns, row)]))
-            if len(buf) >= 10000:
-                yield ("\n".join(buf) + "\n").encode("utf-8")
-                buf = []
-        if buf:
-            yield ("\n".join(buf) + "\n").encode("utf-8")
+def _quoted_date(v) -> str:
+    return '"' + v.isoformat() + '"'
 
-    return enc
 
+def _quoted_timestamp(v) -> str:
+    return '"' + rfc3339(v) + '"'
+
+
+def _sorted_index(columns: list[str]) -> list[int]:
+    return sorted(range(len(columns)), key=lambda i: columns[i])
+
+
+# Row assembly, per format: given the column names and the per-column
+# renderers, return the function that renders one row.
+
+
+def _csv_row(columns: list[str], fns: list):
+    return lambda row: ",".join([f(v) for f, v in zip(fns, row)])
+
+
+def _json_row(columns: list[str], fns: list):
+    cells = [(json_escape(columns[i]) + ":", fns[i], i) for i in _sorted_index(columns)]
+    return lambda row: "{" + ",".join([k + f(row[i]) for k, f, i in cells]) + "}"
+
+
+def _yaml_row(columns: list[str], fns: list):
+    cells = [
+        (("- " if k == 0 else "  ") + columns[i] + ": ", fns[i], i)
+        for k, i in enumerate(_sorted_index(columns))
+    ]
+    return lambda row: "".join([p + f(row[i]) + "\n" for p, f, i in cells])
+
+
+class _Encoding(NamedTuple):
+    """One format's row encoding for ``_partition_encoder``."""
+
+    typed: bool  # the NULL placeholder is parsed as its column's type
+    render: Callable[[object], str]  # the per-row formatter's value renderer
+    by_kind: dict  # by ``_KINDS`` kind: renders as ``render`` does, faster
+    row: Callable  # row assembly: (columns, renderers) -> row function
+    sep: str  # written between consecutive rows
+    terminated: bool  # ``sep`` follows the last row too
+
+
+_JSON_KINDS = {
+    "int": str,
+    "float": go_float_str,
+    "decimal": lambda v: go_float_str(float(v)),
+    "bool": _bool_text,
+    "date": _quoted_date,
+    "timestamp": _quoted_timestamp,
+    "str": json_escape,
+}
+
+# The renderings match the per-row formatters byte for byte (the
+# differential test in tests/test_formats_property.py pins this).
+# NDJSON is the distributed s3:// sink's JSON: one object per line,
+# the only JSON framing that can be produced in parallel.
+_ENCODINGS = {
+    # numeric/bool/date/timestamp renderings never contain a quotable
+    # character (comma, quote, CR/LF, leading Go-space, the literal
+    # ``\.``), so only string-ish columns pay the CSV quote scan
+    "csv": _Encoding(
+        False,
+        _csv_value,
+        {
+            "int": str,
+            "float": go_float_str,
+            "decimal": str,
+            "bool": _bool_text,
+            "date": lambda v: v.isoformat(),
+            "timestamp": rfc3339,
+            "str": _quote_field,
+        },
+        _csv_row,
+        "\n",
+        True,
+    ),
+    "json": _Encoding(True, json_value, _JSON_KINDS, _json_row, ",", False),
+    "ndjson": _Encoding(True, json_value, _JSON_KINDS, _json_row, "\n", True),
+    "yaml": _Encoding(
+        True,
+        _yaml_scalar,
+        {
+            "int": str,
+            "float": go_g_float_str,
+            "decimal": lambda v: go_g_float_str(float(v)),
+            "bool": _bool_text,
+            "date": _quoted_date,
+            "timestamp": _quoted_timestamp,
+            "str": _yaml_str,
+        },
+        _yaml_row,
+        "",
+        False,
+    ),
+}
 
 # marker prefix for per-row encode failures inside executor closures:
 # the driver sees them as opaque Py4J errors, so the fast-path loop
@@ -153,91 +235,57 @@ _SPREAD_BYTES = 8 << 20
 _SPREAD_PARTS = 2
 
 
-def _json_partition_encoder(dtypes: list[T.DataType], columns: list[str], placeholders: list[object]):
-    """Executor-side JSON row encoding for the single-object fast
-    path: each chunk is up to ~10k comma-joined compact objects (keys
-    sorted, same renderings as JsonFormatter's json_value); the driver
-    writes ``[``/``]`` framing and a single ``,`` between consecutive
-    chunks, so the bytes match the per-row path exactly (golden-file
-    tests pin this)."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
+def _partition_encoder(fmt: str, schema: T.StructType, null: str | None):
+    """Executor-side row encoding of one ``_ENCODINGS`` format, for
+    every archive sink: returns ``(gap, enc)``. ``enc`` maps one
+    partition's rows to UTF-8 chunks of up to ~10k rows in partition
+    order; ``gap`` is the text that goes between two consecutive
+    chunks (JSON's ``,``; empty where every row ends itself). The
+    open()/close() framing (CSV header, JSON brackets) is the sink's."""
+    e = _ENCODINGS[fmt]
+    columns = schema.names
+    dtypes = [f.dataType for f in schema.fields]
+    placeholders = _placeholders(schema, null, e.typed)
 
     def enc(rows):
-        from chiv_spark.core.archiver import _ROW_ERR, _bool_text, _column_renderers
-        from chiv_spark.formats.encode import go_float_str, json_escape, json_value, rfc3339
+        from chiv_spark.core.archiver import _ENCODINGS, _ROW_ERR, _column_renderers
 
-        fns = _column_renderers(
-            dtypes,
-            placeholders,
-            json_value,
-            {
-                "int": str,
-                "float": go_float_str,
-                "decimal": lambda v: go_float_str(float(v)),
-                "bool": _bool_text,
-                "date": lambda v: '"' + v.isoformat() + '"',
-                "timestamp": lambda v: '"' + rfc3339(v) + '"',
-                "str": json_escape,
-            },
-        )
-        cells = [(json_escape(columns[i]) + ":", fns[i], i) for i in order]
+        e = _ENCODINGS[fmt]
+        render_row = e.row(columns, _column_renderers(dtypes, placeholders, e.render, e.by_kind))
+        sep = e.sep
+        end = sep if e.terminated else ""
         buf: list[str] = []
         for row in rows:
             try:
-                buf.append("{" + ",".join([k + f(row[i]) for k, f, i in cells]) + "}")
-            except Exception as e:  # noqa: BLE001 — marked for stage re-wrap
-                raise RuntimeError(f"{_ROW_ERR}: {e}") from e
+                buf.append(render_row(row))
+            except Exception as err:  # noqa: BLE001 — marked for stage re-wrap
+                raise RuntimeError(f"{_ROW_ERR}: {err}") from err
             if len(buf) >= 10000:
-                yield ",".join(buf).encode("utf-8")
+                yield (sep.join(buf) + end).encode("utf-8")
                 buf = []
         if buf:
-            yield ",".join(buf).encode("utf-8")
+            yield (sep.join(buf) + end).encode("utf-8")
 
-    return enc
+    return ("" if e.terminated else e.sep), enc
 
 
-def _yaml_partition_encoder(dtypes: list[T.DataType], columns: list[str], placeholders: list[object]):
-    """Executor-side YAML row encoding: one ``- key: value`` block map
-    per row with the same renderings as YamlFormatter's _yaml_scalar;
-    rows are self-delimiting so the driver concatenates chunks with no
-    framing."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
+def _part_encoder(fmt: str, schema: T.StructType, null: str | None):
+    """One part file's bytes from one partition's rows, for the
+    distributed sinks (csv, ndjson, yaml): the format's open() framing
+    (the CSV header), then the rows; ``b""`` for a partition without
+    rows, which writes no part."""
+    gap, enc = _partition_encoder(fmt, schema, null)
+    gap_bytes = gap.encode("utf-8")
+    head = io.BytesIO()
+    if fmt in FORMATS:
+        FORMATS[fmt](head, schema.names).open()
+    head_bytes = head.getvalue()
 
-    def enc(rows):
-        from chiv_spark.core.archiver import _ROW_ERR, _bool_text, _column_renderers
-        from chiv_spark.formats.encode import go_g_float_str, rfc3339
-        from chiv_spark.formats.yaml_format import _yaml_scalar, _yaml_str
+    def part(rows):
+        body = gap_bytes.join(enc(rows))
+        return head_bytes + body if body else b""
 
-        fns = _column_renderers(
-            dtypes,
-            placeholders,
-            _yaml_scalar,
-            {
-                "int": str,
-                "float": go_g_float_str,
-                "decimal": lambda v: go_g_float_str(float(v)),
-                "bool": _bool_text,
-                "date": lambda v: '"' + v.isoformat() + '"',
-                "timestamp": lambda v: '"' + rfc3339(v) + '"',
-                "str": _yaml_str,
-            },
-        )
-        cells = [
-            (("- " if k == 0 else "  ") + columns[i] + ": ", fns[i], i) for k, i in enumerate(order)
-        ]
-        buf: list[str] = []
-        for row in rows:
-            try:
-                buf.append("".join([p + f(row[i]) + "\n" for p, f, i in cells]))
-            except Exception as e:  # noqa: BLE001 — marked for stage re-wrap
-                raise RuntimeError(f"{_ROW_ERR}: {e}") from e
-            if len(buf) >= 10000:
-                yield "".join(buf).encode("utf-8")
-                buf = []
-        if buf:
-            yield "".join(buf).encode("utf-8")
-
-    return enc
+    return part
 
 
 def _resolve_format(fmt: object) -> FormatterFunc:
@@ -293,6 +341,20 @@ def _try_parse_placeholder(placeholder: str, dtype: T.DataType) -> object:
         return _parse_placeholder(placeholder, dtype)
     except ValueError as e:
         return _BadPlaceholder(e)
+
+
+def _placeholders(schema: T.StructType, null: str | None, typed: bool) -> list[object]:
+    """Each column's NULL placeholder. Typed sinks (JSON/YAML) re-parse
+    it per column type: the reference substitutes raw bytes *before*
+    its format-time parse() (chiv.go:175-181), so e.g. a float column
+    with an unparseable placeholder errors there too. Untyped sinks
+    (CSV, custom) take the placeholder string verbatim (golden
+    postgres_with_null.csv)."""
+    if null is None:
+        return [None] * len(schema)
+    if not typed:
+        return [null] * len(schema)
+    return [_try_parse_placeholder(null, f.dataType) for f in schema.fields]
 
 
 def _substitute(row, placeholders: list[object], null: str | None) -> list[object]:
@@ -425,21 +487,7 @@ class Archiver:
         opts: ArchiveOptions,
     ) -> None:
         storage = storage_for(bucket, self.spark)
-        schema = df.schema
         null = opts.null
-        # Typed sinks (JSON/YAML) re-parse the placeholder per column
-        # type — the reference substitutes raw bytes *before* its
-        # format-time parse() (chiv.go:175-181), so e.g. a float column
-        # with an unparseable placeholder errors there too. Untyped
-        # sinks (CSV, custom) take the placeholder string verbatim
-        # (golden postgres_with_null.csv).
-        typed_sink = bool(getattr(fmt_func, "typed", False))
-        placeholders: list[object] = [None] * len(schema)
-        if null is not None:
-            if typed_sink:
-                placeholders = [_try_parse_placeholder(null, f.dataType) for f in schema.fields]
-            else:
-                placeholders = [null] * len(schema)
         # stage-chained error wrapping mirrors the reference's errorf
         # sites (chiv.go:145-198, unit-asserted at chiv_test.go:61-148)
         try:
@@ -466,17 +514,9 @@ class Archiver:
             # one chunk (toLocalIterator). The open()/close() framing
             # (CSV header, JSON brackets) still runs on the driver via
             # the formatter itself.
-            dtypes = [f.dataType for f in schema.fields]
-            if fmt_func is FORMATS.get("csv"):
-                fast = ("", _csv_partition_encoder(dtypes, placeholders))
-            elif fmt_func is FORMATS.get("json"):
-                fast = (",", _json_partition_encoder(dtypes, df.columns, placeholders))
-            elif fmt_func is FORMATS.get("yaml"):
-                fast = ("", _yaml_partition_encoder(dtypes, df.columns, placeholders))
-            else:
-                fast = None
-            if fast is not None:
-                sep, encoder = fast
+            fmt = next((name for name, f in FORMATS.items() if f is fmt_func), None)
+            if fmt is not None:
+                gap, encoder = _partition_encoder(fmt, df.schema, null)
                 # The encoder closure imports chiv_spark ON the
                 # workers, whose import path does not include the repo
                 # root unless the driver happened to run from it — ship
@@ -534,7 +574,7 @@ class Archiver:
                 chunks = iter(
                     src.rdd.mapPartitions(encoder).toLocalIterator(prefetchPartitions=True)
                 )
-                sep_bytes = sep.encode("utf-8")
+                gap_bytes = gap.encode("utf-8")
                 first = True
                 while True:
                     try:
@@ -550,8 +590,8 @@ class Archiver:
                         raise ArchiveError("downloading: scanning rows", e) from e
                     if chunk is _END:
                         break
-                    if sep_bytes and not first:
-                        sink.write(sep_bytes)
+                    if gap_bytes and not first:
+                        sink.write(gap_bytes)
                     sink.write(chunk)
                     first = False
             else:
@@ -562,6 +602,8 @@ class Archiver:
                 # (chiv.go:189-191). The loop avoids per-row closures
                 # (this is the driver-bound hot path): exceptions are
                 # stage-wrapped in-place instead.
+                typed = bool(getattr(fmt_func, "typed", False))
+                placeholders = _placeholders(df.schema, null, typed)
                 rows = iter(df.toLocalIterator(prefetchPartitions=True))
                 format_row = formatter.format_row
                 while True:
@@ -608,14 +650,16 @@ class Archiver:
                 failure.add_note(f"additionally, closing the upload failed: {close_exc!r}")
 
     def _write_distributed(self, df: DataFrame, bucket: str, key: str, opts: ArchiveOptions) -> None:
-        """Scale path: parallel part files under ``bucket/key/``."""
-        fmt = opts.format if isinstance(opts.format, str) else None
+        """Scale path: parallel part files under ``bucket/key/``.
+        ``_archive_df`` has already refused callables and every name
+        outside csv/json/yaml."""
+        fmt = opts.format
         if bucket.startswith("s3://"):
             # direct S3 API: each partition uploads its own part object
             # from the executors (no Hadoop connector, no driver relay)
             from chiv_spark.core.s3dist import write_distributed_s3
 
-            write_distributed_s3(df, bucket, key, fmt or "csv", opts.null)
+            write_distributed_s3(df, bucket, key, fmt, opts.null)
             return
         path = f"{bucket.rstrip('/')}/{key}"
         if fmt == "csv":
@@ -639,10 +683,8 @@ class Archiver:
                     *[F.coalesce(F.col(c).cast("string"), F.lit(opts.null)).alias(c) for c in df.columns]
                 )
             out.write.mode("overwrite").json(path)
-        elif fmt == "yaml":
-            _write_yaml_parts(df, path, opts.null)
         else:
-            df.write.mode("overwrite").parquet(path)
+            _write_yaml_parts(df, path, opts.null)
 
 
 def _default_key(table: str, extension: str | None) -> str:
@@ -651,39 +693,22 @@ def _default_key(table: str, extension: str | None) -> str:
 
 
 def _write_yaml_parts(df: DataFrame, path: str, null: str | None) -> None:
-    """YAML has no Spark-native writer: encode per partition with the
-    same YamlFormatter (open/format/close per partition — the
-    reference's Formatter lifecycle mapped onto partitions,
-    SURVEY.md §2.10), emitted as a text file per part."""
-    from chiv_spark.formats.yaml_format import YamlFormatter
+    """YAML has no Spark-native writer: each partition is encoded by
+    the single-object sink's YAML encoder and written as one text
+    part (the ``text`` writer ends it with one more newline)."""
     from chiv_spark.pyship import ensure_shipped
 
-    # the partition closure references YamlFormatter by module path:
-    # ship the package so workers can import it from any driver cwd
+    # the partition closure imports chiv_spark on the workers: ship
+    # the package so they can import it from any driver cwd
     ensure_shipped(df.sparkSession)
+    part = _part_encoder("yaml", df.schema, null)
 
-    columns = df.columns
-    schema = df.schema
-    placeholders: list[object] = [None] * len(columns)
-    if null is not None:
-        placeholders = [_try_parse_placeholder(null, f.dataType) for f in schema.fields]
+    def text_part(rows):
+        body = part(rows)
+        if body:
+            yield (body.decode("utf-8"),)
 
-    def encode_partition(rows):
-        import io
-
-        from chiv_spark.core.archiver import _substitute
-
-        buf = io.BytesIO()
-        f = YamlFormatter(buf, columns)
-        f.open()
-        for row in rows:
-            f.format_row(_substitute(row, placeholders, null))
-        f.close()
-        text = buf.getvalue().decode("utf-8")
-        if text:
-            yield (text,)
-
-    df.rdd.mapPartitions(encode_partition).toDF(["value"]).write.mode("overwrite").text(path)
+    df.rdd.mapPartitions(text_part).toDF(["value"]).write.mode("overwrite").text(path)
 
 
 _END = object()  # iterator-exhausted sentinel for the scanning stage

@@ -5,10 +5,11 @@ this is the 100 TB path for ``s3://`` buckets — N partitions encode
 and upload N part objects concurrently from the executors, so
 throughput scales with cores/executors and the driver never touches
 the bytes. No Hadoop S3 connector is required: each partition talks
-to the S3 API directly with boto3, using the same byte-exact
-formatter family as the single-object sink (CSV keeps Go quoting,
-JSON becomes NDJSON — one JSON object per line, the only framing that
-can be produced in parallel).
+to the S3 API directly with boto3. Each part is encoded by the
+single-object sink's partition encoder (``archiver._part_encoder``):
+a CSV part is the header plus its rows with Go quoting, a YAML part
+its rows, and JSON becomes NDJSON — one JSON object per line, the
+only framing that can be produced in parallel.
 
 Connection config (endpoint/credentials/region) is read from the
 DRIVER's environment at plan-build time and shipped to workers by
@@ -57,74 +58,23 @@ def write_distributed_s3(
     Returns [(part_key, n_bytes), ...] for the uploaded parts. Empty
     partitions upload nothing (no zero-byte part objects).
     """
-    if fmt not in ("csv", "json", "yaml"):
-        raise ValueError(
-            f"distributed s3:// sink supports csv/json/yaml, not {fmt!r} "
-            "(parquet needs a Hadoop S3 connector — use s3a:// with one installed)"
-        )
+    from chiv_spark.core.archiver import _part_encoder
     from chiv_spark.pyship import ensure_shipped
 
-    # partition closures import chiv_spark formatters on the workers
+    # partition closures import chiv_spark on the workers
     ensure_shipped(df.sparkSession)
 
     cfg = _client_cfg()  # driver env, shipped by value
     bkt = bucket[len("s3://") :].strip("/")
     prefix = key.strip("/")
-    columns = df.columns
-    schema = df.schema
-    placeholders: list[object] = [None] * len(columns)
-    if null is not None:
-        from chiv_spark.core.archiver import _try_parse_placeholder
-
-        typed = fmt in ("json", "yaml")
-        placeholders = [
-            _try_parse_placeholder(null, f.dataType) if typed else null
-            for f in schema.fields
-        ]
+    part = _part_encoder("ndjson" if fmt == "json" else fmt, df.schema, null)
 
     def upload_partition(idx: int, rows):
-        import io
-
         import boto3
 
-        from chiv_spark.core.archiver import _substitute
-
-        buf = io.BytesIO()
-        formatter = None
-        for row in rows:
-            if formatter is None:
-                if fmt == "csv":
-                    from chiv_spark.formats.csv_format import CsvFormatter
-
-                    formatter = CsvFormatter(buf, columns)
-                elif fmt == "yaml":
-                    from chiv_spark.formats.yaml_format import YamlFormatter
-
-                    formatter = YamlFormatter(buf, columns)
-                else:  # json -> NDJSON: parallel-producible framing
-                    from chiv_spark.formats.encode import json_value
-
-                    class _NdJson:
-                        typed = True
-                        extension = "json"
-
-                        def open(self):
-                            pass
-
-                        def format_row(self, record):
-                            obj = dict(zip(columns, record))
-                            buf.write((json_value(obj) + "\n").encode("utf-8"))
-
-                        def close(self):
-                            pass
-
-                    formatter = _NdJson()
-                formatter.open()
-            formatter.format_row(_substitute(row, placeholders, null))
-        if formatter is None:
+        body = part(rows)
+        if not body:
             return  # empty partition: no part object
-        formatter.close()
-        body = buf.getvalue()
         part_key = f"{prefix}/part-{idx:05d}.{fmt}"
         boto3.client("s3", **cfg).put_object(Bucket=bkt, Key=part_key, Body=body)
         yield (part_key, len(body))

@@ -1,13 +1,10 @@
-"""Stream-stream interval join and streaming archival.
+"""Stream-stream interval join.
 
-- ``purchases_with_clicks``: a real stream-stream inner join with
-  watermarks on both sides and an interval condition (click within 1h
-  before the purchase) — the stateful join surface of Structured
-  Streaming (state bounded by the watermark + interval).
-- ``run_streaming_archive``: foreachBatch → ``Archiver`` — the
-  reference's archival job made continuous: each micro-batch of the
-  event stream lands as part files under the bucket. At scale this is
-  the canonical "CDC/event firehose → object store" pipeline.
+``purchases_with_clicks``: a real stream-stream inner join with
+watermarks on both sides and an interval condition (click within 1h
+before the purchase) — the stateful join surface of Structured
+Streaming (state bounded by the watermark + interval). Archiving a
+stream, micro-batch by micro-batch, is ``streaming.archive.archive_stream``.
 """
 
 from __future__ import annotations
@@ -62,38 +59,3 @@ def purchases_with_clicks(
     q.awaitTermination()
     return spark.table(name)
 
-
-def run_streaming_archive(
-    spark: SparkSession,
-    sf_dir: str,
-    bucket: str,
-    checkpoint_dir: str,
-    fmt: str = "csv",
-) -> int:
-    """Continuously archive the event stream: every micro-batch lands
-    via the Archiver's distributed sink under ``bucket/events_stream.
-    <fmt>/batch=<id>/``. Returns the number of micro-batches run."""
-    from chiv_spark.core.archiver import Archiver
-
-    ev = read_event_stream(spark, sf_dir)
-    a = Archiver(spark)
-    batches: list[int] = []
-
-    def archive_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batches.append(batch_id)
-        a.archive_df(
-            batch_df,
-            bucket,
-            key=f"events_stream.{fmt}/batch={batch_id}",
-            format=fmt,
-            distributed=True,
-        )
-
-    q = (
-        ev.writeStream.foreachBatch(archive_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return len(batches)

@@ -235,6 +235,24 @@ class TestDistributedWrites:
         assert {d["int_column"] for d in docs} == {42, 100, 101}
 
 
+    def test_yaml_part_matches_single_object(self, spark, pg_df, tmp_path):
+        """The distributed YAML part and the single-object YAML come
+        from the same encoder: a one-partition frame gives the same
+        bytes, but for the newline the text writer adds to a part."""
+        import glob
+
+        one = pg_df.coalesce(1)
+        a = Archiver(spark)
+        single = a.archive_df(one, str(tmp_path), format="yaml", key="one.yaml", null="0")
+        key = a.archive_df(
+            one, str(tmp_path), format="yaml", key="parts", null="0", distributed=True
+        )
+        parts = glob.glob(f"{tmp_path}/{key}/part-*")
+        assert len(parts) == 1
+        with open(parts[0], "rb") as fh:
+            assert fh.read() == (tmp_path / single).read_bytes() + b"\n"
+
+
 class TestJobGroupHygiene:
     """setJobGroup is thread-local state: an archive must clear it on
     the way out (success or failure), or every later job on the thread

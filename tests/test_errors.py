@@ -41,6 +41,14 @@ class TestStageChainedErrors:
         with pytest.raises(ArchiveError, match=r"^chiv: downloading: formatting row: boom"):
             Archiver(spark).archive_df(small_df, str(tmp_path), format=ExplodingFormatter)
 
+    @pytest.mark.parametrize("fmt", ["csv", "json", "yaml"])
+    def test_non_finite_double_is_formatting_stage(self, spark, tmp_path, fmt):
+        # the built-in formats encode on the executors; a value no
+        # format can render must still report the formatting stage
+        df = spark.createDataFrame([(1, float("nan"))], "id long, v double")
+        with pytest.raises(ArchiveError, match=r"^chiv: downloading: formatting row"):
+            Archiver(spark).archive_df(df, str(tmp_path), format=fmt)
+
     def test_opening_formatter_stage(self, spark, small_df, tmp_path):
         class BadOpen:
             extension = "x"

@@ -23,14 +23,12 @@ from pyspark.sql import types as T
 
 from chiv_spark.core.archiver import (
     _ROW_ERR,
-    _csv_partition_encoder,
-    _json_partition_encoder,
+    _partition_encoder,
     _substitute,
     _try_parse_placeholder,
-    _yaml_partition_encoder,
 )
 from chiv_spark.formats.csv_format import CsvFormatter
-from chiv_spark.formats.encode import go_float_str, go_g_float_str, json_escape, rfc3339
+from chiv_spark.formats.encode import go_float_str, go_g_float_str, json_escape, json_value, rfc3339
 from chiv_spark.formats.json_format import JsonFormatter
 from chiv_spark.formats.yaml_format import YamlFormatter, _yaml_scalar
 
@@ -305,35 +303,41 @@ typed_rows = st.lists(
 
 
 @settings(max_examples=300, deadline=None)
-@given(typed_rows, st.sampled_from([None, "0", "x", "nan", "true"]), st.sampled_from(["csv", "json", "yaml"]))
+@given(
+    typed_rows,
+    st.sampled_from([None, "0", "x", "nan", "true"]),
+    st.sampled_from(["csv", "json", "ndjson", "yaml"]),
+)
 def test_partition_encoders_match_per_row_formatters(rows, null, fmt):
     names = [c for c, _, _ in _COLUMNS]
     dtypes = [t for _, t, _ in _COLUMNS]
-    cls = {"csv": CsvFormatter, "json": JsonFormatter, "yaml": YamlFormatter}[fmt]
+    schema = T.StructType([T.StructField(c, t) for c, t, _ in _COLUMNS])
     if null is None:
         placeholders = [None] * len(names)
-    elif cls.typed:
+    elif fmt != "csv":
         placeholders = [_try_parse_placeholder(null, t) for t in dtypes]
     else:
         placeholders = [null] * len(names)
-    if fmt == "csv":
-        enc = _csv_partition_encoder(dtypes, placeholders)
-    elif fmt == "json":
-        enc = _json_partition_encoder(dtypes, names, placeholders)
-    else:
-        enc = _yaml_partition_encoder(dtypes, names, placeholders)
+    gap, enc = _partition_encoder(fmt, schema, null)
 
     # the per-row path of Archiver._stream_single_object, without the
-    # open()/close() framing that the driver writes around the chunks
+    # open()/close() framing that the driver writes around the chunks;
+    # NDJSON's reference is one json_value object per line
     buf = io.BytesIO()
-    per_row = cls(buf, names)
+    if fmt == "ndjson":
+
+        def format_row(record):
+            buf.write((json_value(dict(zip(names, record))) + "\n").encode("utf-8"))
+
+    else:
+        cls = {"csv": CsvFormatter, "json": JsonFormatter, "yaml": YamlFormatter}[fmt]
+        format_row = cls(buf, names).format_row
     try:
         for row in rows:
-            per_row.format_row(row if null is None else _substitute(row, placeholders, null))
+            format_row(row if null is None else _substitute(row, placeholders, null))
     except ValueError:
         with pytest.raises((ValueError, RuntimeError)) as err:
             b"".join(enc(iter(rows)))
-        if fmt != "csv":
-            assert _ROW_ERR in str(err.value)
+        assert _ROW_ERR in str(err.value)
         return
-    assert b"".join(enc(iter(rows))) == buf.getvalue()
+    assert gap.encode("utf-8").join(enc(iter(rows))) == buf.getvalue()

@@ -193,6 +193,22 @@ class TestDistributedS3Sink:
             )
         assert sorted(lines) == ['{"id":1,"s":"NA"}', '{"id":2,"s":"x"}']
 
+    def test_csv_part_matches_single_object(self, spark, s3_server):
+        """The s3:// CSV part and the single-object CSV come from the
+        same encoder: a one-partition frame gives the same bytes."""
+        df = spark.createDataFrame(
+            [(1, None, 0.5), (2, ' x,"y"', None), (3, "", 1e21)], "id long, s string, v double"
+        ).coalesce(1)
+        a = Archiver(spark)
+        a.archive_df(df, f"s3://{BUCKET}", format="csv", key="one.csv", null="NA")
+        a.archive_df(df, f"s3://{BUCKET}", format="csv", key="csvpart", null="NA", distributed=True)
+        objs = s3_server.list_objects_v2(Bucket=BUCKET, Prefix="csvpart/")["Contents"]
+        assert len(objs) == 1
+        part = s3_server.get_object(Bucket=BUCKET, Key=objs[0]["Key"])["Body"].read()
+        single = s3_server.get_object(Bucket=BUCKET, Key="one.csv")["Body"].read()
+        assert part == single
+        assert single.startswith(b"id,s,v\n1,NA,0.5\n")
+
     def test_parquet_rejected_with_clear_error(self, spark, s3_server):
         df = spark.createDataFrame([(1,)], "id long")
         with pytest.raises(ValueError, match="parquet"):
@@ -204,15 +220,18 @@ class TestDistributedS3Sink:
         """The continuous-archival job (foreachBatch -> distributed
         sink) lands micro-batches as part objects on real S3: the
         reference's archival made continuous AND cloud-parallel."""
-        from chiv_spark.streaming.joins import run_streaming_archive
+        from chiv_spark.sources.catalog import read_event_stream
+        from chiv_spark.streaming.archive import archive_stream
 
-        n = run_streaming_archive(
-            spark,
-            "/root/testdata/sf0.001",
+        keys = archive_stream(
+            read_event_stream(spark, "/root/testdata/sf0.001"),
             f"s3://{BUCKET}",
             str(tmp_path / "ckpt"),
-            fmt="csv",
+            key_template="events_stream.csv/batch={batch_id}",
+            format="csv",
+            distributed=True,
         )
+        n = len(keys)
         assert n >= 1
         objs = s3_server.list_objects_v2(Bucket=BUCKET, Prefix="events_stream.csv/")[
             "Contents"

@@ -9,7 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from chiv_spark.queries.base import t as read_t
-from chiv_spark.streaming.joins import purchases_with_clicks, run_streaming_archive
+from chiv_spark.sources.catalog import read_event_stream
+from chiv_spark.streaming.archive import archive_stream
+from chiv_spark.streaming.joins import purchases_with_clicks
 
 
 @pytest.mark.slow
@@ -39,7 +41,15 @@ class TestStreamStreamJoin:
 @pytest.mark.slow
 class TestStreamingArchive:
     def test_foreachbatch_archives_parts(self, spark, sf_dir, tmp_path):
-        n = run_streaming_archive(spark, sf_dir, str(tmp_path / "bucket"), str(tmp_path / "ck"))
+        keys = archive_stream(
+            read_event_stream(spark, sf_dir),
+            str(tmp_path / "bucket"),
+            str(tmp_path / "ck"),
+            key_template="events_stream.csv/batch={batch_id}",
+            format="csv",
+            distributed=True,
+        )
+        n = len(keys)
         assert n >= 1
         parts = glob.glob(str(tmp_path / "bucket" / "events_stream.csv" / "batch=*" / "part-*"))
         assert parts, "no part files archived"
