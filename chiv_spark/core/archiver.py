@@ -16,7 +16,12 @@ pipe (README.md:130-134).
 Two sink modes, for the built-in formats csv, json and yaml:
 - ``distributed=False`` (default, reference parity): exactly one
   object ``bucket/key``, byte-stable encoder output. A custom
-  ``FormatterFunc`` runs only here.
+  ``FormatterFunc`` runs only here, row by row on the driver. The
+  built-in formats encode in one of three forms (``_encoded_chunks``):
+  a small one-partition input in the driver, because a Python worker
+  task costs more than the encode it would run; a large one-partition
+  input spread over two partitions on the executors; a multi-partition
+  input on the executors, in parallel.
 - ``distributed=True`` (the 100 TB path): a directory of part files
   written in parallel — CSV and JSON (NDJSON) through Spark's native
   writers, YAML through the partition encoder; ``s3://`` buckets
@@ -217,31 +222,36 @@ _ENCODINGS = {
     ),
 }
 
-# marker prefix for per-row encode failures inside executor closures:
-# the driver sees them as opaque Py4J errors, so the fast-path loop
-# greps for this to re-raise with the reference's "formatting row"
-# stage instead of "scanning rows" (chiv.go:189-198 distinguishes the
-# two; tests/test_errors.py pins the stage names)
+# marker prefix for per-row encode failures: on the executors the
+# driver sees them as opaque Py4J errors, and in the driver form a
+# scan failure surfaces from the same generator, so the single-object
+# loop greps for this to re-raise with the reference's "formatting
+# row" stage instead of "scanning rows" (chiv.go:189-198 distinguishes
+# the two; tests/test_errors.py pins the stage names)
 _ROW_ERR = "chiv-format-row"
 
-# The single-object encode spread (see _stream_single_object): a
+# The single-object encode spread (see _encoded_chunks): a
 # one-partition input whose size estimate exceeds _SPREAD_BYTES is
-# range-repartitioned into _SPREAD_PARTS partitions. Measured on sf0.1
-# lineitem, YAML, 4 cores: a 6k-row LIMIT (0.65 MB) ran 0.8-1.9 s
-# unspread vs 1.4-1.6 s spread, a 100k-row LIMIT (10.8 MB) 3.7-4.1 s
-# spread vs 4.3-5.6 s unspread; 100k rows over 1/2/4/8 parts ran
-# 5.2/3.6/4.6/7.5 s at 32 cores and 3.7/2.6/2.8/3.0 s at 8 (r18).
+# range-repartitioned into _SPREAD_PARTS partitions and encoded on the
+# executors; at or under it, the input encodes in the driver. Measured
+# against the old executor encode of one partition, sf0.1 lineitem,
+# YAML, 4 cores: a 6k-row LIMIT (0.65 MB) ran 0.8-1.9 s unspread vs
+# 1.4-1.6 s spread, a 100k-row LIMIT (10.8 MB) 3.7-4.1 s spread vs
+# 4.3-5.6 s unspread; 100k rows over 1/2/4/8 parts ran 5.2/3.6/4.6/7.5 s
+# at 32 cores and 3.7/2.6/2.8/3.0 s at 8 (r18). The crossover has not
+# been re-measured against the driver form, so the gate is unchanged.
 _SPREAD_BYTES = 8 << 20
 _SPREAD_PARTS = 2
 
 
 def _partition_encoder(fmt: str, schema: T.StructType, null: str | None):
-    """Executor-side row encoding of one ``_ENCODINGS`` format, for
-    every archive sink: returns ``(gap, enc)``. ``enc`` maps one
-    partition's rows to UTF-8 chunks of up to ~10k rows in partition
-    order; ``gap`` is the text that goes between two consecutive
-    chunks (JSON's ``,``; empty where every row ends itself). The
-    open()/close() framing (CSV header, JSON brackets) is the sink's."""
+    """Row encoding of one ``_ENCODINGS`` format, for every archive
+    sink, on the executors or in the driver: returns ``(gap, enc)``.
+    ``enc`` maps one partition's rows to UTF-8 chunks of up to ~10k
+    rows in partition order; ``gap`` is the text that goes between two
+    consecutive chunks (JSON's ``,``; empty where every row ends
+    itself). The open()/close() framing (CSV header, JSON brackets)
+    is the sink's."""
     e = _ENCODINGS[fmt]
     columns = schema.names
     dtypes = [f.dataType for f in schema.fields]
@@ -380,6 +390,9 @@ class Archiver:
     def __init__(self, spark: SparkSession, **defaults: object):
         self.spark = spark
         self.defaults = ArchiveOptions().merged(**defaults)
+        # job groups cancel() was called for; an archive entering a
+        # group clears its name, so a group can be reused
+        self._cancelled: set[str] = set()
 
     # -- public surface (Archive / ArchiveRows analogs) ----------------
 
@@ -393,6 +406,7 @@ class Archiver:
             yield
             return
         sc = self.spark.sparkContext
+        self._cancelled.discard(str(job_group))
         sc.setJobGroup(str(job_group), "chiv archive", True)
         try:
             yield
@@ -443,7 +457,10 @@ class Archiver:
     def cancel(self, job_group: str) -> None:
         """Cancel a running archive by its job group (cooperative
         cancellation — the ``ArchiveWithContext`` ctx analog;
-        SURVEY.md §2.1-S3)."""
+        SURVEY.md §2.1-S3). Spark cancels the group's running jobs; the
+        record stops a single-object archive whose encode outlives its
+        job (the driver form) at its next chunk."""
+        self._cancelled.add(str(job_group))
         self.spark.sparkContext.cancelJobGroup(str(job_group))
 
     # -- internals ------------------------------------------------------
@@ -505,75 +522,25 @@ class Archiver:
             sink = _UploadGuard(sink_raw)
             formatter: Formatter = fmt_func(sink, df.columns)
             _staged(formatter.open, "downloading: opening formatter")
-            # Built-in-format fast paths: rows are stateless encodings,
-            # so formatting runs ON THE EXECUTORS (mapPartitions → byte
-            # chunks) and the driver only concatenates chunks in
-            # partition order, inserting the format's inter-chunk
-            # separator (JSON's ``,``) — same bytes as the per-row
-            # formatter, ~#cores× the throughput. Driver memory stays
-            # one chunk (toLocalIterator). The open()/close() framing
-            # (CSV header, JSON brackets) still runs on the driver via
-            # the formatter itself.
+            # Built-in formats: rows are stateless encodings, so one
+            # ``_partition_encoder`` turns rows into byte chunks and
+            # this loop only concatenates them in partition order,
+            # inserting the format's inter-chunk separator (JSON's
+            # ``,``) — the per-row formatter's bytes. Where the encode
+            # runs (the driver or the executors) is
+            # ``_encoded_chunks``' choice; the loop is the same. Driver
+            # memory stays one partition (toLocalIterator). The
+            # open()/close() framing (CSV header, JSON brackets) runs
+            # on the driver via the formatter itself.
             fmt = next((name for name, f in FORMATS.items() if f is fmt_func), None)
             if fmt is not None:
                 gap, encoder = _partition_encoder(fmt, df.schema, null)
-                # The encoder closure imports chiv_spark ON the
-                # workers, whose import path does not include the repo
-                # root unless the driver happened to run from it — ship
-                # the package first (same guard the distributed sinks
-                # have; without it any driver launched from another cwd
-                # dies here with ModuleNotFoundError).
-                from chiv_spark.pyship import ensure_shipped
-
-                ensure_shipped(df.sparkSession)
-                # A LIMIT (or coalesce) upstream collapses the plan to
-                # ONE partition, so the Python row encode — the hot
-                # loop of this path — runs on a single core while the
-                # rest idle. When the input is single-partitioned and
-                # its size estimate clears ``_SPREAD_BYTES`` (8 MiB),
-                # range-repartition on a sequential row id: global
-                # order (and therefore the output bytes) is preserved
-                # — range partitions of a totally ordered unique key
-                # concatenate back in order — while the encode fans
-                # out. The spread is not free: a range-sample job, a
-                # shuffle, and a recompute of everything upstream
-                # (for ``ORDER BY … LIMIT``, the top-k over the whole
-                # input). The estimate is the input files' size capped
-                # by the plan's row bound × default row size
-                # (core/sizing.py), so a LIMIT is charged for the rows
-                # it can return, not the file it reads (measured
-                # crossover beside the constants). The SMALL fan-out
-                # (``_SPREAD_PARTS``, 2):
-                # toLocalIterator schedules one job per partition, two
-                # partitions give the driver sink one prefetched chunk
-                # to overlap with, and anything wider just queues jobs.
-                # Real corpus-scale inputs arrive multi-partitioned and
-                # never enter this branch.
-                from chiv_spark.core.sizing import relation_size_est
-
-                src = df
-                est = relation_size_est(df)
-                if est >= 1 << 62:
-                    # unknown size: keep the untouched one-partition
-                    # path (the pre-spread behavior for odd inputs)
-                    est = 0
-                if est > _SPREAD_BYTES and df.rdd.getNumPartitions() == 1:
-                    # collision-free helper name: withColumn over an
-                    # existing user column would silently REPLACE it
-                    # and drop() would then erase the user's data from
-                    # the archived output (r17 advice)
-                    rid = "__rid"
-                    while rid in df.columns:
-                        rid = "_" + rid
-                    src = (
-                        df.withColumn(rid, F.monotonically_increasing_id())
-                        .repartitionByRange(_SPREAD_PARTS, rid)
-                        .sortWithinPartitions(rid)
-                        .drop(rid)
-                    )
-                chunks = iter(
-                    src.rdd.mapPartitions(encoder).toLocalIterator(prefetchPartitions=True)
-                )
+                chunks = iter(_encoded_chunks(df, encoder))
+                # the thread's job group, set by _job_group: cancel()
+                # records it, and the loop stops at the next chunk even
+                # when the Spark job already finished (the driver-side
+                # encode outlives its job)
+                group = self.spark.sparkContext.getLocalProperty("spark.jobGroup.id")
                 gap_bytes = gap.encode("utf-8")
                 first = True
                 while True:
@@ -582,14 +549,19 @@ class Archiver:
                     except ArchiveError:
                         raise
                     except Exception as e:  # noqa: BLE001
-                        # executor-side per-row failures carry the
-                        # _ROW_ERR marker: surface them with the
+                        # per-row encode failures carry the _ROW_ERR
+                        # marker in every form: surface them with the
                         # reference's formatting stage, not scanning
                         if _ROW_ERR in str(e):
                             raise ArchiveError("downloading: formatting row", e) from e
                         raise ArchiveError("downloading: scanning rows", e) from e
                     if chunk is _END:
                         break
+                    if group in self._cancelled:
+                        raise ArchiveError(
+                            "downloading: scanning rows",
+                            RuntimeError(f"job group {group!r} was cancelled"),
+                        )
                     if gap_bytes and not first:
                         sink.write(gap_bytes)
                     sink.write(chunk)
@@ -685,6 +657,69 @@ class Archiver:
             out.write.mode("overwrite").json(path)
         else:
             _write_yaml_parts(df, path, opts.null)
+
+
+def _encoded_chunks(df: DataFrame, encoder):
+    """The single-object sink's encoded chunks, in row order, from one
+    of three forms:
+
+    - **driver** — one partition whose size estimate is at most
+      ``_SPREAD_BYTES`` (or unknown): ``encoder`` runs in this process
+      over ``toLocalIterator``. No Python worker task starts. A worker
+      task's fixed cost (pyspark re-reads its zip's directory on every
+      task, ~0.13 CPU-s on a reused worker; moving 6k rows into one
+      and back ~0.17 CPU-s) is larger than a 6k-row encode
+      (0.04–0.11 CPU-s), and one partition gives the executors no
+      parallelism to win it back.
+    - **spread** — one partition above ``_SPREAD_BYTES``: a LIMIT (or
+      coalesce) upstream collapsed the plan to one partition, so it is
+      range-repartitioned on a sequential row id into
+      ``_SPREAD_PARTS`` partitions and encoded on the executors. Range
+      partitions of a totally ordered unique key concatenate back in
+      order, so the bytes do not change. The spread is not free: a
+      range-sample job, a shuffle, and a recompute of everything
+      upstream (for ``ORDER BY … LIMIT``, the top-k over the whole
+      input). The estimate is the input files' size capped by the
+      plan's row bound × default row size (core/sizing.py), so a
+      LIMIT is charged for the rows it can return, not the file it
+      reads. Two partitions give the driver sink one prefetched chunk
+      to overlap with (toLocalIterator runs one job per partition);
+      anything wider just queues jobs.
+    - **executors** — more than one partition: the partitions encode
+      in parallel (``mapPartitions``) while the driver relays chunks.
+      Real corpus-scale inputs arrive here.
+
+    A row that fails to render raises with the ``_ROW_ERR`` marker in
+    every form; a failing scan carries none."""
+    if df.rdd.getNumPartitions() == 1:
+        from chiv_spark.core.sizing import relation_size_est
+
+        est = relation_size_est(df)
+        if est >= 1 << 62:
+            # unknown size: keep the untouched one-partition form
+            est = 0
+        if est <= _SPREAD_BYTES:
+            return encoder(df.toLocalIterator(prefetchPartitions=True))
+        # collision-free helper name: withColumn over an existing user
+        # column would silently REPLACE it and drop() would then erase
+        # the user's data from the archived output
+        rid = "__rid"
+        while rid in df.columns:
+            rid = "_" + rid
+        df = (
+            df.withColumn(rid, F.monotonically_increasing_id())
+            .repartitionByRange(_SPREAD_PARTS, rid)
+            .sortWithinPartitions(rid)
+            .drop(rid)
+        )
+    # the encoder closure imports chiv_spark ON the workers, whose
+    # import path does not include the repo root unless the driver
+    # happened to run from it: ship the package first (without it any
+    # driver launched from another cwd dies with ModuleNotFoundError)
+    from chiv_spark.pyship import ensure_shipped
+
+    ensure_shipped(df.sparkSession)
+    return df.rdd.mapPartitions(encoder).toLocalIterator(prefetchPartitions=True)
 
 
 def _default_key(table: str, extension: str | None) -> str:

@@ -289,7 +289,9 @@ class TestDistributedCallableFormatter:
 class TestForeignCwdWorkers:
     """r5 regression: the CSV fast path runs chiv_spark code on the
     executors; a driver launched from OUTSIDE the repo root (any real
-    deployment) must still work because pyship ships the package.
+    deployment) must still work because pyship ships the package. The
+    frame has two partitions: a one-partition frame encodes in the
+    driver and would not reach the workers.
     Before the fix, only the distributed sinks shipped — the
     single-object fast path died with ModuleNotFoundError on the
     workers whenever the driver's cwd was not /root/repo."""
@@ -303,7 +305,7 @@ import sys
 sys.path.insert(0, "/root/repo")
 from chiv_spark import Archiver, get_spark
 spark = get_spark("foreign-cwd", master="local[2]", shuffle_partitions=2)
-df = spark.range(5).selectExpr("id", "concat('row,', id) AS s").coalesce(1)
+df = spark.range(5, numPartitions=2).selectExpr("id", "concat('row,', id) AS s")
 key = Archiver(spark).archive_df(df, r"{tmp_path}", format="csv", key="out.csv")
 print("KEY=" + key)
 spark.stop()
@@ -335,7 +337,7 @@ import sys
 sys.path.insert(0, "/root/repo")
 from chiv_spark import Archiver, get_spark
 spark = get_spark("foreign-cwd-json", master="local[2]", shuffle_partitions=2)
-df = spark.range(5).selectExpr("id", "concat('v\\"x', id) AS s").coalesce(1)
+df = spark.range(5, numPartitions=2).selectExpr("id", "concat('v\\"x', id) AS s")
 key = Archiver(spark).archive_df(df, r"{tmp_path}", format="json", key="out.json")
 print("KEY=" + key)
 spark.stop()
@@ -412,16 +414,20 @@ class TestExecutorSideJsonYaml:
 
 
 class TestSpreadPath:
-    """The single-object encode spread: a one-partition frame whose
-    size estimate clears ``archiver._SPREAD_BYTES`` is
-    range-repartitioned so the encode runs in parallel. The bytes must
-    not change, and a LIMIT is charged for the rows it can return."""
+    """Where the single-object encode runs (``archiver._encoded_chunks``):
+    a one-partition frame under ``archiver._SPREAD_BYTES`` encodes in
+    the driver; one above it is range-repartitioned so the encode runs
+    in parallel on the executors; a multi-partition frame encodes on
+    the executors. The bytes must not change, and a LIMIT is charged
+    for the rows it can return."""
 
-    @pytest.fixture(scope="class")
-    def one_part_df(self, spark):
+    FORMS = ("driver", "executors", "spread")
+
+    @staticmethod
+    def _frame(spark, parts: int):
         from pyspark.sql import functions as F
 
-        return spark.range(6_000, numPartitions=1).select(
+        return spark.range(6_000, numPartitions=parts).select(
             F.col("id"),
             F.when(F.col("id") % 5 == 0, None)
             .otherwise(F.concat(F.lit('na"me, é '), F.col("id").cast("string")))
@@ -437,6 +443,14 @@ class TestSpreadPath:
             ).alias("ts"),
         )
 
+    @pytest.fixture(scope="class")
+    def frames(self, spark):
+        """form -> the frame it archives; ``spread`` is the one-partition
+        frame, archived with the gate forced down."""
+        one, two = self._frame(spark, 1), self._frame(spark, 2)
+        assert (one.rdd.getNumPartitions(), two.rdd.getNumPartitions()) == (1, 2)
+        return {"driver": one, "executors": two, "spread": one}
+
     @staticmethod
     def _archive(spark, df, bucket, fmt, key, null, group) -> tuple[bytes, int]:
         """(object bytes, Spark jobs the archive ran)."""
@@ -444,23 +458,64 @@ class TestSpreadPath:
         jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(group)
         return read_obj(bucket, key), len(jobs)
 
-    @pytest.mark.parametrize("fmt", ["csv", "json", "yaml"])
-    @pytest.mark.parametrize("null", [None, "0"])
-    def test_spread_bytes_match_unspread(
-        self, spark, one_part_df, tmp_path, monkeypatch, fmt, null
-    ):
+    def _archive_form(self, spark, frames, monkeypatch, form, bucket, fmt, null, group):
         from chiv_spark.core import archiver
 
+        with monkeypatch.context() as m:
+            if form == "spread":
+                m.setattr(archiver, "_SPREAD_BYTES", 0)
+            return self._archive(
+                spark, frames[form], bucket, fmt, f"{form}.{fmt}", null, f"{form}-{group}"
+            )
+
+    @pytest.mark.parametrize("fmt", ["csv", "json", "yaml"])
+    @pytest.mark.parametrize("null", [None, "0"])
+    def test_spread_bytes_match_unspread(self, spark, frames, tmp_path, monkeypatch, fmt, null):
+        """The three forms write identical bytes."""
         tag = f"{fmt}-{null}"
-        plain, plain_jobs = self._archive(
-            spark, one_part_df, str(tmp_path), fmt, f"plain.{fmt}", null, f"plain-{tag}"
+        out = {
+            form: self._archive_form(spark, frames, monkeypatch, form, str(tmp_path), fmt, null, tag)
+            for form in self.FORMS
+        }
+        assert out["spread"][1] > out["driver"][1]  # the spread form really ran
+        assert out["executors"][0] == out["driver"][0]
+        assert out["spread"][0] == out["driver"][0]
+
+    @pytest.mark.parametrize("form", FORMS)
+    def test_encode_runs_where_its_form_says(self, spark, frames, tmp_path, monkeypatch, form):
+        """A one-partition frame under the gate encodes in this (the
+        driver) process and starts no Python worker task; a
+        two-partition and a spread frame encode in worker processes.
+        The encoder records the pid of every process it runs in."""
+        from chiv_spark.core import archiver
+
+        real = archiver._partition_encoder
+        pids = tmp_path / "pids"
+        pids.mkdir()
+
+        def recording(fmt, schema, null):
+            gap, enc = real(fmt, schema, null)
+
+            def enc_and_record(rows, pids=str(pids)):
+                import os
+
+                open(os.path.join(pids, str(os.getpid())), "w").close()
+                yield from enc(rows)
+
+            return gap, enc_and_record
+
+        monkeypatch.setattr(archiver, "_partition_encoder", recording)
+        if form == "spread":
+            monkeypatch.setattr(archiver, "_SPREAD_BYTES", 0)
+        _, jobs = self._archive(
+            spark, frames[form], str(tmp_path), "csv", "where.csv", None, f"where-{form}"
         )
-        monkeypatch.setattr(archiver, "_SPREAD_BYTES", 0)
-        spread, spread_jobs = self._archive(
-            spark, one_part_df, str(tmp_path), fmt, f"spread.{fmt}", null, f"spread-{tag}"
-        )
-        assert spread_jobs > plain_jobs  # the spread form really ran
-        assert spread == plain
+        encoded_in = {int(p.name) for p in pids.iterdir()}
+        if form == "driver":
+            assert encoded_in == {os.getpid()}
+            assert jobs == 1  # the toLocalIterator scan, no encode job
+        else:
+            assert encoded_in and os.getpid() not in encoded_in
 
     def test_limit_over_large_file_archives_in_one_job(self, spark, tmp_path):
         """An ``ORDER BY … LIMIT`` over a file above the 8 MiB gate

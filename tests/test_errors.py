@@ -42,12 +42,33 @@ class TestStageChainedErrors:
             Archiver(spark).archive_df(small_df, str(tmp_path), format=ExplodingFormatter)
 
     @pytest.mark.parametrize("fmt", ["csv", "json", "yaml"])
-    def test_non_finite_double_is_formatting_stage(self, spark, tmp_path, fmt):
-        # the built-in formats encode on the executors; a value no
-        # format can render must still report the formatting stage
-        df = spark.createDataFrame([(1, float("nan"))], "id long, v double")
+    @pytest.mark.parametrize("parts", [1, 2])
+    def test_non_finite_double_is_formatting_stage(self, spark, tmp_path, fmt, parts):
+        # a one-partition frame encodes in the driver, a two-partition
+        # one on the executors; a value no format can render must
+        # report the formatting stage in both
+        df = spark.createDataFrame(
+            [(1, float("nan")), (2, float("nan"))], "id long, v double"
+        ).repartition(parts)
+        assert df.rdd.getNumPartitions() == parts
         with pytest.raises(ArchiveError, match=r"^chiv: downloading: formatting row"):
             Archiver(spark).archive_df(df, str(tmp_path), format=fmt)
+
+    @pytest.mark.parametrize("fmt", ["csv", "json", "yaml"])
+    @pytest.mark.parametrize("parts", [1, 2])
+    def test_failing_scan_is_scanning_stage(self, spark, tmp_path, fmt, parts):
+        # a row the query itself cannot produce fails the scan, not the
+        # encode, in the driver form and on the executors alike
+        from pyspark.sql import functions as F
+
+        df = spark.range(10, numPartitions=parts).select(
+            F.when(F.col("id") == 5, F.raise_error(F.lit("bad row")))
+            .otherwise(F.col("id"))
+            .alias("id")
+        )
+        with pytest.raises(ArchiveError, match=r"^chiv: downloading: scanning rows"):
+            Archiver(spark).archive_df(df, str(tmp_path), format=fmt, key=f"scan.{fmt}")
+        assert not (tmp_path / f"scan.{fmt}").exists()
 
     def test_opening_formatter_stage(self, spark, small_df, tmp_path):
         class BadOpen:
