@@ -233,14 +233,23 @@ _ROW_ERR = "chiv-format-row"
 # The single-object encode spread (see _encoded_chunks): a
 # one-partition input whose size estimate exceeds _SPREAD_BYTES is
 # range-repartitioned into _SPREAD_PARTS partitions and encoded on the
-# executors; at or under it, the input encodes in the driver. Measured
-# against the old executor encode of one partition, sf0.1 lineitem,
-# YAML, 4 cores: a 6k-row LIMIT (0.65 MB) ran 0.8-1.9 s unspread vs
-# 1.4-1.6 s spread, a 100k-row LIMIT (10.8 MB) 3.7-4.1 s spread vs
-# 4.3-5.6 s unspread; 100k rows over 1/2/4/8 parts ran 5.2/3.6/4.6/7.5 s
-# at 32 cores and 3.7/2.6/2.8/3.0 s at 8 (r18). The crossover has not
-# been re-measured against the driver form, so the gate is unchanged.
-_SPREAD_BYTES = 8 << 20
+# executors; at or under it, the input encodes in the driver. Driver
+# form vs spread, sf0.1 lineitem ORDER BY ... LIMIT, local[4] on a
+# 4-vCPU VM, one warm-up then best-of-3 walls (median CPU-s of the
+# process tree):
+#
+#   rows  est MB  csv driver    csv spread    yaml driver   yaml spread
+#   25k    2.57   0.53 (1.11)   0.97 (2.49)   0.87 (1.21)   1.14 (2.58)
+#   50k    5.15   1.04 (1.33)   1.44 (2.92)   1.61 (2.04)   1.39 (2.88)
+#   75k    7.72   1.44 (1.66)   1.41 (2.84)   1.99 (2.32)   1.76 (3.68)
+#   100k  10.30   2.00 (2.61)   2.19 (3.98)   4.02 (4.15)   2.53 (5.12)
+#
+# YAML, the slowest encode, crosses over between 2.57 and 5.15 MB; CSV
+# stays faster in the driver through 10.3 MB, and the driver always
+# spends less CPU. One gate serves every format, so it sits between
+# YAML's two points. 100k rows over 1/2/4/8 parts ran
+# 5.2/3.6/4.6/7.5 s at 32 cores and 3.7/2.6/2.8/3.0 s at 8 (r18).
+_SPREAD_BYTES = 4 << 20
 _SPREAD_PARTS = 2
 
 

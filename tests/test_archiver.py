@@ -518,7 +518,7 @@ class TestSpreadPath:
             assert encoded_in and os.getpid() not in encoded_in
 
     def test_limit_over_large_file_archives_in_one_job(self, spark, tmp_path):
-        """An ``ORDER BY … LIMIT`` over a file above the 8 MiB gate
+        """An ``ORDER BY … LIMIT`` over a file above the spread gate
         returns ~40 KB: it must not pay the spread's sample job,
         shuffle and top-k recompute."""
         import numpy as np
