@@ -51,6 +51,7 @@ from pyspark.sql.window import Window
 
 from chiv_spark.functions.detmath import det_round, duckdb_det_round
 from chiv_spark.queries.base import query, t
+from chiv_spark.sources.catalog import read_table_stream
 
 # --------------------------------------------------------------------------
 # scalar_url_funcs
@@ -1035,11 +1036,7 @@ def streaming_incremental_exact_substr(spark, sf_dir):
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     base = docs.filter(~_xs_fate_pred())
-    stream = (
-        spark.readStream.schema(t(spark, sf_dir, "documents").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+    stream = read_table_stream(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="chiv-xsubstream-")
     return incremental_exact_substr_stream(
         spark,

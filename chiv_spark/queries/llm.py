@@ -21,6 +21,7 @@ from chiv_spark.functions.detmath import det_round, duckdb_det_round
 from chiv_spark.functions.hashing import duckdb_hash64, hash64
 from chiv_spark.operators import dedup, multimodal, similarity, text
 from chiv_spark.queries.base import query, t
+from chiv_spark.sources.catalog import read_table_stream
 
 # ---------------------------------------------------------------- text
 
@@ -353,11 +354,7 @@ def streaming_bloom_membership(spark, sf_dir):
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     prior = docs.filter(F.col("doc_id") % 2 == 0).select("text")
-    stream = (
-        spark.readStream.schema(t(spark, sf_dir, "documents").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+    stream = read_table_stream(spark, sf_dir, "documents")
     # the arrivals carve-out (odd docs + re-ingested even/20 copies)
     # expressed per batch: the duplicated slice re-enters with shifted
     # ids, exactly the batch twin's arrivals relation
@@ -724,11 +721,7 @@ def streaming_incremental_dedup(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     fate = hash64(F.concat(F.lit("inc:"), F.col("doc_id").cast("string"))) % 10
     base = docs.filter(fate != 0)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+    stream = read_table_stream(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="chiv-incdedup-")
     return incremental_dedup_stream(
         spark, base, stream, work, delta_predicate=(fate == 0)
@@ -803,11 +796,7 @@ def streaming_incremental_paragraph(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     fate = hash64(F.concat(F.lit("inc:"), F.col("doc_id").cast("string"))) % 10
     base = docs.filter(fate != 0)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+    stream = read_table_stream(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="chiv-incpara-")
     return index_fold_stream(
         spark,
@@ -888,11 +877,7 @@ def streaming_incremental_boilerplate(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     fate = hash64(F.concat(F.lit("inc:"), F.col("doc_id").cast("string"))) % 10
     base = docs.filter(fate != 0)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+    stream = read_table_stream(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="chiv-incbp-")
     return index_fold_stream(
         spark,
@@ -1182,11 +1167,7 @@ def streaming_incremental_phash(spark, sf_dir):
             multimodal.image_dhash(ids), id_col="media_id", sig_col="dhash"
         )
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+    stream = read_table_stream(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="chiv-incphash-")
     return index_fold_stream(
         spark,
@@ -2018,11 +1999,7 @@ def streaming_incremental_embed(spark, sf_dir):
     emb = t(spark, sf_dir, "embeddings")
     fate = hash64(F.concat(F.lit("incv:"), F.col("vec_id").cast("string"))) % 10
     base = emb.filter(fate != 0)
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+    stream = read_table_stream(spark, sf_dir, "embeddings")
     work = tempfile.mkdtemp(prefix="chiv-incembed-")
     return incremental_embed_dedup_stream(
         spark, base, stream, work, delta_predicate=(fate == 0), dim=EMB_DIM
@@ -2971,11 +2948,7 @@ def streaming_incremental_ivfpq(spark, sf_dir):
 
     emb = t(spark, sf_dir, "embeddings")
     base = emb.filter(~_ivfpq_delta_pred())
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+    stream = read_table_stream(spark, sf_dir, "embeddings")
     work = tempfile.mkdtemp(prefix="chiv-incivfpq-")
     return ivfpq_fold_stream(
         spark, base, stream, work, delta_predicate=_ivfpq_delta_pred(), dim=EMB_DIM

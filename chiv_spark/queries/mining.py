@@ -37,6 +37,7 @@ from pyspark.sql.window import Window
 from chiv_spark.functions.detmath import det_round, duckdb_det_round
 from chiv_spark.functions.hashing import duckdb_hash64, hash64
 from chiv_spark.queries.base import query, t
+from chiv_spark.sources.catalog import read_table_stream
 
 # --------------------------------------------------------------------------
 # events_activity_streaks
@@ -600,11 +601,7 @@ def streaming_heavy_hitters(spark, sf_dir):
     from chiv_spark.streaming.dedup_index import heavy_hitters_stream
 
     docs = t(spark, sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+    stream = read_table_stream(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="chiv-hhstream-")
     return heavy_hitters_stream(
         spark,

@@ -35,6 +35,7 @@ from chiv_spark.core import state
 from chiv_spark.functions.detmath import det_round, duckdb_det_round
 from chiv_spark.functions.hashing import duckdb_hash64, hash64
 from chiv_spark.queries.base import query, t
+from chiv_spark.sources.catalog import read_table_stream
 
 # --------------------------------------------------------------------------
 # text_quality_filter
@@ -852,7 +853,6 @@ def _domain_counts_store(spark, sf_dir) -> str:
     Streaming's own file tracking folds just the new files. Only a
     change to RESIDENT files (rewrite/delete) drops the store and
     re-folds."""
-    import os
     import shutil
     import tempfile
 
@@ -861,20 +861,9 @@ def _domain_counts_store(spark, sf_dir) -> str:
     fp = state.fingerprint([f"{sf_dir}/documents.parquet"])
 
     def build(stale):
-        docs = t(spark, sf_dir, "documents")
-        # single-FILE layout (the testdata shape): glob the one leaf out
-        # of sf_dir; DIRECTORY layout (the shape appends actually land
-        # in): stream the table dir itself, so a newly-appended part
+        # a DIRECTORY table streams its part files, so an appended
         # file is exactly what the checkpoint sees as the delta
-        table_path = os.path.join(sf_dir.rstrip("/"), "documents.parquet")
-        if os.path.isdir(table_path):
-            stream = spark.readStream.schema(docs.schema).parquet(table_path)
-        else:
-            stream = (
-                spark.readStream.schema(docs.schema)
-                .option("pathGlobFilter", "documents.parquet")
-                .parquet(sf_dir.rstrip("/"))
-            )
+        stream = read_table_stream(spark, sf_dir, "documents")
         if stale is not None and fp is not None and set(stale[0]) <= set(fp):
             # append-only: reuse the store, the checkpoint is the
             # delta detector
@@ -952,11 +941,6 @@ def streaming_domain_stats(spark, sf_dir):
 
     from chiv_spark.streaming.domain_stats import domain_stats_stream
 
-    docs = t(spark, sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+    stream = read_table_stream(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="chiv-domstats-")
     return domain_stats_stream(spark, stream, work)

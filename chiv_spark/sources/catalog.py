@@ -40,7 +40,7 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
       engine's UTC session timezone;
     - plain ``timestamp`` → no-op.
 
-    Every events consumer (``read_table`` and ``read_event_stream``)
+    Every events consumer (``read_table`` and ``read_table_stream``)
     goes through this: ``unix_micros()`` and ``withWatermark()``
     both reject TIMESTAMP_NTZ.
     """
@@ -73,19 +73,32 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return state.get_or_build(spark, "table", path, state.fingerprint([path]), build)
 
 
-def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events table as a streaming DataFrame with a normalized
-    ``ts``. The file stream source needs a directory, so it streams
-    the sf dir with a glob filter selecting only the events file,
-    under the static table's schema."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table ``name`` of ``sf_dir`` as a streaming DataFrame under the
+    table file's own schema (``events`` with the normalized ``ts`` of
+    :func:`read_table`). A ``<name>.parquet`` directory, the layout
+    appends land in, is streamed directly, so a newly added part file
+    is what the checkpoint sees as the delta. The file stream source
+    needs a directory, so a single file is streamed from ``sf_dir``
+    through a glob filter selecting just that file. The layout is read
+    through the Hadoop FileSystem: an ``os.path`` check is False for a
+    ``scheme://`` URI and would glob a directory's part files away."""
+    from chiv_spark.streaming import store
+
     sf = sf_dir.rstrip("/")
-    static = spark.read.parquet(f"{sf}/events.parquet")
-    return normalize_event_ts(
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
+    path = f"{sf}/{name}.parquet"
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # the raw file schema: read_table's ts is already normalized
+        schema = spark.read.parquet(path).schema
+    else:
+        schema = read_table(spark, sf_dir, name).schema
+    reader = spark.readStream.schema(schema)
+    if store.is_dir(spark, path):
+        stream = reader.parquet(path)
+    else:
+        stream = reader.option("pathGlobFilter", f"{name}.parquet").parquet(sf)
+    return normalize_event_ts(stream) if name == "events" else stream
 
 
 def load_tables(spark: SparkSession, sf_dir: str, register: bool = True) -> dict[str, DataFrame]:

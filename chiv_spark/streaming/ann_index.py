@@ -25,10 +25,11 @@ The 100 TB layout, shared with the dedup index:
   tombstones, compaction and the swap are the store's, with cells
   playing the bucket role on natural rather than hashed keys.
 
-Under ``trigger(availableNow=True)`` with the whole delta in one
-batch the accumulated (vec_id, cell, q_err) relation equals the
-batch query ``ann_ivfpq_incremental``'s, which is how the registry
-row shares its DuckDB oracle verbatim.
+The fold runs as a bounded ``foreachBatch`` stream through
+streaming/runner.py. With the whole delta in one availableNow batch
+the accumulated (vec_id, cell, q_err) relation equals the batch
+query ``ann_ivfpq_incremental``'s, which is how the registry row
+shares its DuckDB oracle verbatim.
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ from pyspark.sql import functions as F
 
 from chiv_spark.operators import similarity
 from chiv_spark.streaming import store
+from chiv_spark.streaming.runner import run_batches
 from chiv_spark.streaming.store import SEED_BATCH
 
 OUT_COLS = ["vec_id", "cell", "q_err"]
@@ -249,13 +251,7 @@ def ivfpq_fold_stream(
         codes = similarity.ivfpq_encode_against(delta, cents, cb, dim=dim, m=m)
         write_codes_generation(codes, codes_dir, batch_id)
 
-    q = (
-        emb_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_batches(emb_stream, ckpt_dir, _apply)
     # explicit missing-sink check (not a bare except): an unreadable
     # sink must raise, never silently report an empty index
     if not store.exists(spark, codes_dir):

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from chiv_spark.core.archiver import Archiver
+from chiv_spark.streaming.runner import run_batches
 
 
 def archive_stream(
@@ -48,11 +49,5 @@ def archive_stream(
         archiver.archive_df(batch_df, bucket, key=key, **archive_opts)
         written.append(key)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_batches(stream_df, checkpoint_dir, _sink)
     return written

@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from chiv_spark.sources.catalog import read_event_stream
+from chiv_spark.sources.catalog import read_table_stream
+from chiv_spark.streaming.runner import run_to_table
 
 ATTRIB_SCHEMA = T.StructType(
     [
@@ -98,7 +99,7 @@ def run_streaming_attribution(
     # _attribute is a module-level function → cloudpickle serializes
     # it by reference; ship the package so workers can import it
     ensure_shipped(spark)
-    stream = read_event_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "events")
     events = stream.select(
         "user_id", "event_id", "event_type", F.unix_micros("ts").alias("ts_us")
     )
@@ -113,14 +114,4 @@ def run_streaming_attribution(
         # attribute that user's NEXT purchase on a longer run)
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = "streaming_attribution"
-    q = (
-        attributed.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_table(attributed, checkpoint_dir, "append")

@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from chiv_spark.streaming.runner import run_batches
+
 #: partition column name for the key-hash bucket
 _KB = "kb"
 
@@ -140,13 +142,7 @@ def apply_changes_stream(
             spark, batch_df, target_dir, keys, seq_cols, op_col=op_col, n_buckets=n_buckets
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_batches(stream, checkpoint_dir, _apply)
     return read_target(spark, target_dir, op_col=op_col)
 
 

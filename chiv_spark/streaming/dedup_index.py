@@ -48,10 +48,10 @@ compaction and the swap; this module keeps the band-index specifics:
   FileSystem, so local, ``file://`` and ``s3a://`` roots share it
   (on ``s3a://`` the swap is not atomic; see ``store.swap``).
 
-Under ``trigger(availableNow=True)`` with the whole delta in one
-batch the result equals the corresponding batch query's relation,
-which is how the registry queries share their DuckDB oracles
-verbatim.
+Each fold runs as a bounded ``foreachBatch`` stream through
+streaming/runner.py. With the whole delta in one availableNow batch
+the result equals the corresponding batch query's relation, which is
+how the registry queries share their DuckDB oracles verbatim.
 """
 
 from __future__ import annotations
@@ -63,6 +63,7 @@ from pyspark.sql import functions as F
 
 from chiv_spark.operators import dedup, similarity
 from chiv_spark.streaming import store
+from chiv_spark.streaming.runner import run_batches
 from chiv_spark.streaming.store import (  # noqa: F401 — the index's public names
     SEED_BATCH,
     _tombstone_dir,
@@ -228,13 +229,7 @@ def index_fold_stream(
             write_index_generation(_fold_rel(dsig), key_col, index_dir, batch_id)
         dsig.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_batches(stream, ckpt_dir, _apply)
     # explicit missing-sink check, not a bare except: an unreadable or
     # corrupt sink must RAISE, never silently report "no duplicates"
     # (infrastructure failure masquerading as a clean result); remote
@@ -369,13 +364,7 @@ def bloom_membership_stream(
         # absent (batch semantics), later batches see these bits
         store.write_gen(dedup.bloom_bitmap(delta, m_bits, k), bloom_dir, batch_id)
 
-    q = (
-        arrivals_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_batches(arrivals_stream, ckpt_dir, _apply)
     if not store.exists(spark, out_dir):
         return spark.createDataFrame(
             [], "doc_id bigint, bloom_hit boolean, exact_dup boolean"
@@ -434,13 +423,7 @@ def heavy_hitters_stream(
             batch_id,
         )
 
-    q = (
-        arrivals_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_batches(arrivals_stream, ckpt_dir, _apply)
     if not store.exists(spark, cand_dir):
         return spark.createDataFrame([], "w string, freq bigint")
     cand = (

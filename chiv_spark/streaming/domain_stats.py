@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chiv_spark.streaming import store
+from chiv_spark.streaming.runner import run_batches
 from chiv_spark.streaming.store import SEED_BATCH
 
 #: counter-store schema (src_batch is the partition column)
@@ -102,13 +103,7 @@ def domain_stats_stream(
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         store.write_gen(domain_counts(batch_df), counts_dir, batch_id)
 
-    q = (
-        arrivals_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_batches(arrivals_stream, ckpt_dir, _apply)
     if not store.exists(spark, counts_dir):
         return spark.createDataFrame(
             [],

@@ -12,18 +12,18 @@ trio (net-new surface vs the reference, whose "streaming" is bounded
   inside the watermark horizon instead of the full key history
   (unlike plain dropDuplicates on a stream, which grows forever).
 
-Both run as bounded jobs via trigger(availableNow=True) on the static
-events parquet so tests and the driver execute them to completion.
+Both run as bounded memory-sink jobs through streaming/runner.py on
+the static events parquet, so tests and the driver run them to
+completion.
 """
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chiv_spark.sources.catalog import read_event_stream, read_table
+from chiv_spark.sources.catalog import read_table, read_table_stream
+from chiv_spark.streaming.runner import run_to_table
 
 
 def purchases_by_segment(spark: SparkSession, sf_dir: str, checkpoint_dir: str) -> DataFrame:
@@ -33,10 +33,10 @@ def purchases_by_segment(spark: SparkSession, sf_dir: str, checkpoint_dir: str) 
     The stream-static join is stateless: each microbatch joins against
     the (unhinted) static side, so the plan survives any customer-table
     size. The aggregation is the only stateful operator."""
-    purchases = read_event_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
+    events = read_table_stream(spark, sf_dir, "events")
+    purchases = events.filter(F.col("event_type") == "purchase")
     cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    name = f"purchases_by_segment_{uuid.uuid4().hex[:8]}"
-    q = (
+    agg = (
         purchases.join(cust, purchases.user_id == cust.c_custkey)
         .groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(
@@ -44,15 +44,8 @@ def purchases_by_segment(spark: SparkSession, sf_dir: str, checkpoint_dir: str) 
             # decimal sum: exact/order-free → bit-identical to the batch twin
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
         )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_table(agg, checkpoint_dir, "complete")
 
 
 def deduped_user_types(spark: SparkSession, sf_dir: str, checkpoint_dir: str) -> DataFrame:
@@ -62,18 +55,10 @@ def deduped_user_types(spark: SparkSession, sf_dir: str, checkpoint_dir: str) ->
     The availableNow run processes the file in one batch before the
     watermark advances, so nothing is dropped as late and the emitted
     set is exactly the batch DISTINCT (first occurrence per pair)."""
-    events = read_event_stream(spark, sf_dir)
-    name = f"deduped_user_types_{uuid.uuid4().hex[:8]}"
-    q = (
+    events = read_table_stream(spark, sf_dir, "events")
+    deduped = (
         events.withWatermark("ts", "2 hours")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_table(deduped, checkpoint_dir, "append")

@@ -2,10 +2,10 @@
 
 Net-new surface vs the reference (its "streaming" is bounded-memory
 pipelining of a batch job, SURVEY.md §2.9). Here: a real
-``readStream`` → watermark → tumbling-window aggregation →
-``writeStream``, runnable as a bounded job with
-``trigger(availableNow=True)`` so tests and the driver can execute it
-to completion on the static parquet events table.
+stream of the events table → watermark → tumbling-window aggregation
+→ memory sink, run as a bounded job by streaming/runner.py so tests
+and the driver execute it to completion on the static parquet events
+table.
 """
 
 from __future__ import annotations
@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chiv_spark.sources.catalog import read_event_stream
+from chiv_spark.sources.catalog import read_table_stream
+from chiv_spark.streaming.runner import run_to_table
 
 
 def windowed_event_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
@@ -47,19 +48,9 @@ def run_events_stream(
     """Run the windowed aggregation as a real stream over the events
     parquet (file source, availableNow trigger, memory sink) and
     return the completed result as a DataFrame."""
-    stream = read_event_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "events")
     agg = windowed_event_counts(stream, window=window, watermark=watermark)
-    name = "events_windowed"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_table(agg, checkpoint_dir, "complete")
 
 
 def run_windowed_distinct_users(
@@ -78,7 +69,7 @@ def run_windowed_distinct_users(
     streaming COUNT(DISTINCT) would hold every user id in the state
     store. Returns (window_start, approx_users) with the estimate
     materialized from the final sketch."""
-    stream = read_event_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "events")
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"))
@@ -88,17 +79,7 @@ def run_windowed_distinct_users(
             F.hll_sketch_estimate("sk").alias("approx_users"),
         )
     )
-    name = "windowed_distinct_users"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_table(agg, checkpoint_dir, "complete")
 
 
 def run_native_session_windows(
@@ -115,7 +96,7 @@ def run_native_session_windows(
     max(event time) - delay, so the emitted set is exactly the batch
     sessions whose end (last event + gap) is at or below it — the
     oracle states that closure in SQL."""
-    stream = read_event_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "events")
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy("user_id", F.session_window("ts", gap).alias("w"))
@@ -127,14 +108,4 @@ def run_native_session_windows(
             "n_events",
         )
     )
-    name = "native_session_windows"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_table(agg, checkpoint_dir, "append")

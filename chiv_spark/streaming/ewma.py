@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from chiv_spark.sources.catalog import read_event_stream
+from chiv_spark.sources.catalog import read_table_stream
+from chiv_spark.streaming.runner import run_to_table
 
 #: smoothing factor — MUST equal queries/timeseries.py:_EWMA_A (the
 #: shared-oracle contract); imported there from this constant's twin
@@ -100,7 +101,7 @@ def run_streaming_ewma(
     from chiv_spark.pyship import ensure_shipped
 
     ensure_shipped(spark)
-    stream = read_event_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "events")
     events = stream.filter(F.col("value").isNotNull()).select(
         "user_id",
         "event_id",
@@ -119,14 +120,4 @@ def run_streaming_ewma(
         # value forever; availableNow terminates after the data batches
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = "streaming_ewma"
-    q = (
-        smoothed.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_table(smoothed, checkpoint_dir, "append")

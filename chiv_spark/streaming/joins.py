@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chiv_spark.sources.catalog import read_event_stream
+from chiv_spark.sources.catalog import read_table_stream
+from chiv_spark.streaming.runner import run_to_table
 
 
 def purchases_with_clicks(
@@ -21,7 +22,7 @@ def purchases_with_clicks(
     """Run a stream-stream interval join (purchase ⋈ prior click of
     the same user within ``window``) to completion under availableNow
     and return the joined rows."""
-    ev = read_event_stream(spark, sf_dir)
+    ev = read_table_stream(spark, sf_dir, "events")
     purchases = (
         ev.filter(F.col("event_type") == "purchase")
         .select(
@@ -47,15 +48,5 @@ def purchases_with_clicks(
         & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {window}")),
         "inner",
     ).select("purchase_id", F.col("p_user").alias("user_id"), "click_id", "p_ts", "c_ts")
-    name = "purchases_with_clicks"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_table(joined, checkpoint_dir, "append")
 

@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from chiv_spark.sources.catalog import read_event_stream
+from chiv_spark.sources.catalog import read_table_stream
+from chiv_spark.streaming.runner import run_to_table
 
 SESSION_SCHEMA = T.StructType(
     [
@@ -100,7 +101,7 @@ def run_stateful_sessions(
     # _track is a module-level function → cloudpickle serializes it by
     # reference; ship the package so workers can import it
     ensure_shipped(spark)
-    stream = read_event_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "events")
     events = stream.select("user_id", F.unix_micros("ts").alias("ts_us"))
     sessions = events.groupBy("user_id").applyInPandasWithState(
         _track,
@@ -113,14 +114,4 @@ def run_stateful_sessions(
         # last session per user stays in state (documented).
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = "stateful_sessions"
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_table(sessions, checkpoint_dir, "append")

@@ -104,6 +104,14 @@ def exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
+def is_dir(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` is a directory, read through its Hadoop
+    FileSystem for the same reason as :func:`exists`; raises if
+    ``path`` does not exist."""
+    fs, p = _fs(spark, path)
+    return bool(fs.getFileStatus(p).isDirectory())
+
+
 def write_gen(
     rel: DataFrame, root: str, batch_id: int, bucket: str | None = None
 ) -> None:

@@ -42,6 +42,7 @@ from chiv_spark.operators.suffixes import (
 )
 from chiv_spark.session import overlap
 from chiv_spark.streaming import store
+from chiv_spark.streaming.runner import run_batches
 from chiv_spark.streaming.store import SEED_BATCH
 
 OUT_COLS = ["doc_id", "n_tokens", "span_ge8", "trimmed_text", "keep"]
@@ -274,13 +275,7 @@ def incremental_exact_substr_stream(
             store.write_gen(delta.withColumn("pb", _doc_pb()), docs_dir, batch_id, "pb")
         dwin.unpersist()
 
-    q = (
-        doc_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_batches(doc_stream, ckpt_dir, _apply)
     if not store.exists(spark, out_dir):
         return spark.createDataFrame([], OUT_SCHEMA)
     # explicit schema: a batch whose delta was EMPTY writes a file-less

@@ -220,11 +220,11 @@ class TestDistributedS3Sink:
         """The continuous-archival job (foreachBatch -> distributed
         sink) lands micro-batches as part objects on real S3: the
         reference's archival made continuous AND cloud-parallel."""
-        from chiv_spark.sources.catalog import read_event_stream
+        from chiv_spark.sources.catalog import read_table_stream
         from chiv_spark.streaming.archive import archive_stream
 
         keys = archive_stream(
-            read_event_stream(spark, "/root/testdata/sf0.001"),
+            read_table_stream(spark, "/root/testdata/sf0.001", "events"),
             f"s3://{BUCKET}",
             str(tmp_path / "ckpt"),
             key_template="events_stream.csv/batch={batch_id}",

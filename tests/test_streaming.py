@@ -59,10 +59,12 @@ class TestStreamingDedup:
 class TestStreamingArchive:
     def test_foreachbatch_csv_matches_batch_archive(self, spark, sf_dir, tmp_path):
         from chiv_spark.core.archiver import Archiver
-        from chiv_spark.sources.catalog import read_event_stream
+        from chiv_spark.sources.catalog import read_table_stream
         from chiv_spark.streaming.archive import archive_stream
 
-        stream = read_event_stream(spark, sf_dir).select("event_id", "user_id", "event_type")
+        stream = read_table_stream(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type"
+        )
         bucket = str(tmp_path / "bucket")
         keys = archive_stream(
             stream,
@@ -90,10 +92,10 @@ class TestStreamingArchive:
     def test_key_template_requires_batch_id(self, spark, sf_dir, tmp_path):
         import pytest
 
-        from chiv_spark.sources.catalog import read_event_stream
+        from chiv_spark.sources.catalog import read_table_stream
         from chiv_spark.streaming.archive import archive_stream
 
-        stream = read_event_stream(spark, sf_dir)
+        stream = read_table_stream(spark, sf_dir, "events")
         with pytest.raises(ValueError, match="batch_id"):
             archive_stream(stream, str(tmp_path / "b"), str(tmp_path / "c"), key_template="fixed.csv")
 
@@ -2373,3 +2375,28 @@ class TestPersistentDomainStore:
         assert not os.path.exists(work1)
         # session-store hygiene for other tests
         state.clear("domgate")
+
+    def test_store_cache_folds_a_uri_directory_table(self, spark, tmp_path):
+        """A ``file://`` sf_dir whose documents.parquet is a DIRECTORY
+        folds the same docs as its bare path: the stream's layout is
+        read through the Hadoop FileSystem, where an ``os.path`` check
+        is False for any URI and globs the part files away, folding
+        nothing and writing no counts store at all."""
+        from pyspark.sql import functions as F
+
+        from chiv_spark.core import state
+        from chiv_spark.queries.quality import _domain_counts_store
+        from chiv_spark.streaming.domain_stats import read_counts
+
+        good = " ".join(f"w{i}" for i in range(20))
+        sf = tmp_path / "sf"
+        spark.createDataFrame(
+            [(1, good, "sA"), (2, good + " x", "sB")],
+            "doc_id long, text string, source string",
+        ).coalesce(1).write.parquet(str(sf / "documents.parquet"))
+        try:
+            work = _domain_counts_store(spark, f"file://{sf}")
+            n = read_counts(spark, f"{work}/counts").agg(F.sum("n")).collect()[0][0]
+            assert n == 2
+        finally:
+            state.clear("domgate")

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from chiv_spark.queries.base import t as read_t
-from chiv_spark.sources.catalog import read_event_stream
+from chiv_spark.sources.catalog import read_table_stream
 from chiv_spark.streaming.archive import archive_stream
 from chiv_spark.streaming.joins import purchases_with_clicks
 
@@ -42,7 +42,7 @@ class TestStreamStreamJoin:
 class TestStreamingArchive:
     def test_foreachbatch_archives_parts(self, spark, sf_dir, tmp_path):
         keys = archive_stream(
-            read_event_stream(spark, sf_dir),
+            read_table_stream(spark, sf_dir, "events"),
             str(tmp_path / "bucket"),
             str(tmp_path / "ck"),
             key_template="events_stream.csv/batch={batch_id}",

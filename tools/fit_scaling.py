@@ -104,10 +104,8 @@ PLAN: dict[str, tuple[list[str], str]] = {
     # by the exact-substr stage at the replica), the video canonical
     # chain and the incremental media tiers (bounded 60-item media
     # universe -> expect near-flat: codec work does not grow with the
-    # corpus), the suffix streaming fold twin (single-file probe dir:
-    # the readStream pathGlobFilter matches the FILE documents.parquet,
-    # and the replica's spark-written documents.parquet is a
-    # directory), the bloom FPR audit, the suffix-store deletion
+    # corpus), the suffix streaming fold twin (single-file probe dir,
+    # see PROBE_FILE_DIR), the bloom FPR audit, the suffix-store deletion
     # lifecycle (two probes through tombstones), and the capped fuzzy
     # join (output bounded by n_sub_blocks*cap^2/2 -> the
     # sub-quadratic proof the r13 verdict asked for; fit over the SF
@@ -132,8 +130,7 @@ PLAN: dict[str, tuple[list[str], str]] = {
     # gate (two corpus-linear verdict passes + domain-sized
     # broadcasts), the training-shard manifest (one linear
     # projection + a 32-key agg), and the streaming heavy-hitters
-    # candidate fold (single-file probe dir, same readStream
-    # pathGlobFilter constraint as the suffix fold twin)
+    # candidate fold (single-file probe dir, see PROBE_FILE_DIR)
     "dedup_paragraph_boilerplate": ([SF01, SF1, PROBE_DIR], "documents"),
     "dedup_incremental_boilerplate": ([SF01, SF1, PROBE_DIR], "documents"),
     "quality_domain_gate": ([SF01, SF1, PROBE_DIR], "documents"),
@@ -154,8 +151,8 @@ PLAN: dict[str, tuple[list[str], str]] = {
     "media_delete_then_probe": ([SF01, SF1, PROBE_DIR], "documents"),
     # the counter-store gate: one stream fold + the per-doc verdict
     # pass — corpus-linear like quality_domain_gate, minus its
-    # second domain-report aggregation (single-file probe dir: the
-    # readStream pathGlobFilter matches FILE names)
+    # second domain-report aggregation (single-file probe dir, see
+    # PROBE_FILE_DIR)
     "quality_domain_gate_incremental": (
         [SF01, SF1, "/tmp/chiv-probe-10x-onefile"],
         "documents",
@@ -182,8 +179,8 @@ PLAN: dict[str, tuple[list[str], str]] = {
     # index rows — which is the row's whole claim
     "pipeline_incremental_ingest": ([SF01, SF1, PROBE_DIR], "documents"),
     "pipeline_incremental_ingest_card": ([SF01, SF1, PROBE_DIR], "documents"),
-    # the compacted domain gate (single-file probe dir: readStream
-    # pathGlobFilter matches file names); warm after the first fold,
+    # the compacted domain gate (single-file probe dir, see
+    # PROBE_FILE_DIR); warm after the first fold,
     # compaction idempotent per run
     "quality_domain_gate_compacted": (
         [SF01, SF1, "/tmp/chiv-probe-10x-onefile"],
@@ -202,10 +199,10 @@ PLAN: dict[str, tuple[list[str], str]] = {
     "ann_ivfpq_topk_persisted": ([SF01, SF1, PROBE_DIR], "embeddings"),
 }
 
-#: single-FILE variant of the 10x replica for streaming rows: their
-#: readStream uses pathGlobFilter="documents.parquet", which matches
-#: file names — the replica's directory-shaped documents.parquet
-#: would stream zero rows
+#: single-FILE variant of the 10x replica for streaming rows, whose
+#: earlier fits were measured on it. ``catalog.read_table_stream``
+#: streams the directory-shaped replica too; these rows stay on the
+#: one-file layout so their fits remain comparable
 PROBE_FILE_DIR = "/tmp/chiv-probe-10x-onefile"
 
 
